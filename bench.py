@@ -112,7 +112,7 @@ def calibration(spark) -> float:
     return round(min(once(), once()), 4)
 
 
-def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
+def bench_streaming(spark, sf_dir: str) -> dict:
     """Streaming leg of the BASELINE.md protocol: the 3-rule pipeline
     over a file stream of the events table, split into multiple files so
     several micro-batches execute; reports throughput + micro-batch
@@ -120,15 +120,8 @@ def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
 
     Measured on the SCALE-PATH state store: the RocksDB provider
     (changelog checkpointing, memory-bounded native state — the store
-    that survives 100 TB key cardinality). ``backend=None`` auto-picks
-    the per-key API — transformWithStateInPandas when its protobuf
-    dependency is importable, applyInPandasWithState otherwise
-    (identical alerts either way — tests/test_streaming_tws.py);
-    ``backend="bucketed"`` runs the key-packing backend (one state blob
-    per xxhash64 bucket — the 100 TB cardinality path, 8.15× the
-    per-key backend at 295 k keys, STRESS_r05_streaming.json; alerts
-    byte-identical, tests/test_streaming_bucketed.py). The JSON records
-    which combination actually ran."""
+    that survives 100 TB key cardinality), with the default
+    arrival-order stateful path (key-packed into 4,096 hash buckets)."""
     import glob
     import shutil
     import tempfile
@@ -138,13 +131,6 @@ def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
     from stream_sentinel_spark.sources.batch import load_table
     from stream_sentinel_spark.streaming import compile_rules_streaming, read_file_stream
 
-    if backend is None:
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-
-            backend = "tws"
-        except ImportError:
-            backend = "aiws"
     rocksdb = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
@@ -184,7 +170,7 @@ def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
         )
         walerts = compile_rules_streaming(
             wstream, DEFAULT_RULES, key_field="user_id", time_col="ts",
-            order_cols=("event_id",), backend=backend,
+            order_cols=("event_id",),
         )
         wq = (
             walerts.writeStream.format("noop")
@@ -202,7 +188,7 @@ def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
         )
         alerts = compile_rules_streaming(
             stream, DEFAULT_RULES, key_field="user_id", time_col="ts",
-            order_cols=("event_id",), backend=backend,
+            order_cols=("event_id",),
         )
         t0 = time.perf_counter()
         q = (
@@ -225,7 +211,7 @@ def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
             "events_per_sec": round(n_events / wall, 1),
             "alerts": snap["anomalies_detected_total"],
             "microbatch_ms": snap["processing_latency_ms"],
-            "state_backend": backend,
+            "state_backend": "arrival",
             "state_store": "rocksdb",
         }
     finally:
@@ -341,18 +327,6 @@ def main() -> None:
         log(f"STREAMING BENCH FAIL: {exc}")
         streaming = {"error": str(exc)[:200]}
 
-    # second streaming line: the key-packing backend at the same
-    # protocol shape — the 100 TB cardinality path promoted from stress
-    # artifact to the official bench (round-5 verdict item 4); at the
-    # protocol's 1,500-key shape the two should be within noise, the
-    # packed backend's 8× advantage appears past ~100k keys
-    # (STRESS_r05_streaming.json)
-    try:
-        streaming_bucketed = bench_streaming(spark, sf_dir, backend="bucketed")
-    except Exception as exc:
-        log(f"STREAMING BUCKETED BENCH FAIL: {exc}")
-        streaming_bucketed = {"error": str(exc)[:200]}
-
     calib_post = calibration(spark)
     try:
         load_post = list(os.getloadavg())
@@ -371,7 +345,6 @@ def main() -> None:
                 "cpus": cpus,
                 "spark": spark.version,
                 "streaming": streaming,
-                "streaming_bucketed": streaming_bucketed,
                 "warm_pass_sec": warm_sec,
                 "calibration_sec": {"pre": calib_pre, "post": calib_post},
                 "loadavg": {"pre": load_pre, "post": load_post},
@@ -394,8 +367,9 @@ def main() -> None:
     # and the driver saw only the slowest 123 — the round-9 phantom
     # "drops"), so the encoding degrades PRECISION, never coverage:
     # keys are the unique ID prefix (q01..q55, x01..x122, detect),
-    # separators are compact (no spaces), per-query load forensics stay
-    # on the full-JSON line above (committed in bench_sf01*.json), and
+    # separators are compact (no spaces), the start/end 1-min loadavg
+    # rides along but per-query load forensics stay on the full-JSON
+    # line above (committed in bench_sf01*.json), and
     # values start at 2-decimal seconds and step down (>=10 s to 1
     # decimal, then to integers; sub-second to 1 decimal) until the
     # line fits the window. Values remain SECONDS at every tier — the
@@ -403,6 +377,9 @@ def main() -> None:
     # shed (bounded relative error ~5-10%, under min-of-2 run noise).
     # The slowest-K fallback remains as a never-expected backstop.
     _FINAL_LINE_MAX = 1950  # line + "\n" must fit the ~2000-char tail
+
+    def _load1(avgs: list):
+        return round(avgs[0], 1) if avgs else None
 
     def _short(name: str) -> str:
         return name.split("_", 1)[0]
@@ -442,12 +419,10 @@ def main() -> None:
                 if isinstance(streaming, dict)
                 else None
             ),
-            "eps_bucketed": (
-                streaming_bucketed.get("events_per_sec")
-                if isinstance(streaming_bucketed, dict)
-                else None
-            ),
             "calib": [round(calib_pre, 2), round(calib_post, 2)],
+            # host 1-min loadavg at start and end: contention vs code
+            # for a disputed slow query, from this line alone
+            "load": [_load1(load_pre), _load1(load_post)],
             "queries": qmap,
         }
 

@@ -5666,7 +5666,7 @@ def _streaming_detect(spark, sf, *, backend: str, watermark: str | None):
     Structured Streaming over the events table and return the drained
     alerts projected to the batch oracle's columns.
 
-    ``watermark=None`` runs the arrival-order backends (one source file
+    ``watermark=None`` runs the arrival-order path (one source file
     → one availableNow micro-batch; multi-batch delivery parity is
     pinned separately in tests/test_streaming_parity.py and
     test_streaming_bucketed.py). A non-None watermark runs the
@@ -5743,16 +5743,16 @@ def _streaming_detect(spark, sf, *, backend: str, watermark: str | None):
                     st = _os.stat(f)
                     _os.utime(f, (st.st_atime, base_mtime + 2.0 * (i + 1)))
                 seen = now
-        # Python-state backends scale with ROWS of per-partition Python
+        # Python-state paths scale with ROWS of per-partition Python
         # work, not just per-partition state-store overhead, so their
         # partition target is much smaller than the JVM-state entries'
-        # 25k (measured at sf0.1/100k rows: "bucketed" 3.2 s at 32
-        # parts vs 11.2 s at 4; "event_time_bucketed" — which re-reads
-        # every partition's event-time buffer on EACH trigger — is best
-        # at ~8 parts: 16.3 s vs 18.4 s at 32 and 20.8 s at 4).
+        # 25k (measured at sf0.1/100k rows: "arrival" 3.2 s at 32
+        # parts vs 11.2 s at 4; "event_time" — which re-reads every
+        # partition's event-time buffer on EACH trigger — is best at
+        # ~8 parts: 16.3 s vs 18.4 s at 32 and 20.8 s at 4).
         per_backend = (
             {"target_rows": 12_500, "floor": 8}
-            if backend.startswith("event_time")
+            if backend == "event_time"
             else {"target_rows": 3_000, "floor": 8}
         )
         with _stream_parts(spark, ev.count(), **per_backend):
@@ -5796,8 +5796,8 @@ def _streaming_detect(spark, sf, *, backend: str, watermark: str | None):
 def x84(spark, sf):
     """detect_pipeline's streaming twin, run INSIDE the correctness
     gate: events → file stream → compile_rules_streaming on the
-    key-packing backend (stateful_alerts_bucketed — the 100 TB
-    cardinality path, 8.15× the per-key backend at 295 k keys) →
+    arrival-order path (stateful_alerts — key-packed into 4,096 hash
+    buckets, 8.15× per-key grouping at 295 k keys) →
     availableNow drain → parquet sink (NOT a memory sink — see
     _streaming_detect's sink-choice rationale: memory sinks pin every
     alert row in the driver for the session's lifetime, which round 6
@@ -5812,7 +5812,7 @@ def x84(spark, sf):
     Reference anchor: StreamSentinelJob.java:102-140 (buildPipeline),
     executed rather than re-expressed: this entry runs the actual
     streaming operators, not a batch translation of them."""
-    return _streaming_detect(spark, sf, backend="bucketed", watermark=None)
+    return _streaming_detect(spark, sf, backend="arrival", watermark=None)
 
 
 # ---------------------------------------------------------------------------
@@ -5983,7 +5983,7 @@ def x85(spark, sf):
 @query("x86_streaming_event_time_parity", _DETECT_ORACLE)
 def x86(spark, sf):
     """The EVENT-TIME ordered streaming mode inside the gate: same
-    3-rule pipeline, backend="event_time_bucketed" (per-bucket reorder
+    3-rule pipeline, backend="event_time" (per-bucket reorder
     buffers flushed in (ts, event_id) order as the watermark passes —
     alerts invariant to delivery order up to the bound, the mode whose
     batch parity test_streaming_event_time pins on shuffled cross-batch
@@ -5998,7 +5998,7 @@ def x86(spark, sf):
     from stream_sentinel_spark.streaming.sources import DEFAULT_WATERMARK
 
     return _streaming_detect(
-        spark, sf, backend="event_time_bucketed", watermark=DEFAULT_WATERMARK
+        spark, sf, backend="event_time", watermark=DEFAULT_WATERMARK
     )
 
 

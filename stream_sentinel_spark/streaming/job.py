@@ -29,7 +29,10 @@ from stream_sentinel_spark.functions.alerts import serialize_alerts
 from stream_sentinel_spark.plans.pipeline import compile_rule
 from stream_sentinel_spark.rules import DetectionRule
 from stream_sentinel_spark.streaming.sources import INGEST_COL
-from stream_sentinel_spark.streaming.state import stateful_alerts
+from stream_sentinel_spark.streaming.state import (
+    stateful_alerts,
+    stateful_alerts_event_time,
+)
 
 STATEFUL_TYPES = ("rate", "statistical", "cusum")
 
@@ -42,8 +45,7 @@ def compile_rules_streaming(
     time_col: str = "ts",
     order_cols: Sequence[str] = (),
     state_ttl_ms: int | None = None,
-    backend: str = "aiws",
-    n_state_buckets: int = 4096,
+    backend: str = "arrival",
 ) -> DataFrame:
     """Compile a rule set against a STREAMING events frame.
 
@@ -52,30 +54,31 @@ def compile_rules_streaming(
     one keyed stateful branch. Empty rule set is fatal, as at job
     start (StreamSentinelJob.java:70-75).
 
-    ``backend`` picks the stateful API: ``"aiws"`` (default) is
-    `applyInPandasWithState`; ``"tws"`` is `transformWithStateInPandas`
-    (Spark 4 typed-state API, built-in TTL, requires the protobuf
-    package — see :func:`stateful_alerts_tws`); ``"bucketed"`` is the
-    key-packing backend for EXTREME key cardinality — one state blob
-    per ``xxhash64(key) mod n_state_buckets`` bucket, amortizing the
-    per-key framework round trip that dominates past ~100k distinct
-    keys (see :func:`stateful_alerts_bucketed`; ``n_state_buckets`` is
-    ignored by the arrival-order per-key backends). ``"event_time"``
-    and ``"event_time_bucketed"`` run the EVENT-TIME ordered mode
-    (:func:`stateful_alerts_event_time` — alerts invariant to delivery
-    order up to the watermark; ``events`` MUST carry ``withWatermark``;
-    ``state_ttl_ms`` there means EVENT-TIME idleness — deterministic
-    and replay-stable — and expired rate windows are pruned
-    automatically even without it). The arrival-order backends produce
-    identical alerts to each other (tests/test_streaming_tws.py,
-    tests/test_streaming_bucketed.py) and the event-time backends match
-    the batch plans (tests/test_streaming_event_time.py); any runs on
-    the RocksDB state store via
-    ``spark.sql.streaming.stateStore.providerClass`` — the store that
-    survives 100 TB key cardinality."""
-    if backend not in (
-        "aiws", "tws", "bucketed", "event_time", "event_time_bucketed"
-    ):
+    ``backend`` picks the stateful path; both are key-packed (one state
+    blob per ``xxhash64(key) mod 4096`` bucket — the fixed
+    ``state.N_STATE_BUCKETS``, not derived from config because the
+    bucket is part of the checkpointed state key):
+
+    - ``"arrival"`` (default): the reference's arrival-order
+      evaluation (:func:`~stream_sentinel_spark.streaming.state.stateful_alerts`);
+      ``state_ttl_ms`` evicts keys idle for that much wall-clock time.
+    - ``"event_time"``: events ordered by ``(time_col, *order_cols)``
+      up to the watermark, so alerts are invariant to delivery order
+      (:func:`~stream_sentinel_spark.streaming.state.stateful_alerts_event_time`);
+      ``events`` MUST carry ``withWatermark``; ``state_ttl_ms`` there
+      means EVENT-TIME idleness — deterministic and replay-stable — and
+      expired rate windows are pruned automatically even without it.
+
+    ``"event_time_bucketed"`` is accepted as the earlier name of
+    ``"event_time"`` (the benchmark's detect-late workload still passes
+    it); any other name raises ``ValueError``. Both paths match the
+    batch plans (tests/test_streaming_parity.py,
+    tests/test_streaming_bucketed.py, tests/test_streaming_event_time.py)
+    and run on the RocksDB state store via
+    ``spark.sql.streaming.stateStore.providerClass``."""
+    if backend == "event_time_bucketed":
+        backend = "event_time"
+    if backend not in ("arrival", "event_time"):
         raise ValueError(f"unknown stateful backend: {backend!r}")
     if not rules:
         raise ValueError(
@@ -100,32 +103,9 @@ def compile_rules_streaming(
                 )
             )
     if stateful:
-        extra: dict = {}
-        if backend == "tws":
-            from stream_sentinel_spark.streaming.state import stateful_alerts_tws
-
-            stateful_fn = stateful_alerts_tws
-            extra["state_ttl_ms"] = state_ttl_ms
-        elif backend == "bucketed":
-            from stream_sentinel_spark.streaming.state import (
-                stateful_alerts_bucketed,
-            )
-
-            stateful_fn = stateful_alerts_bucketed
-            extra["n_buckets"] = n_state_buckets
-            extra["state_ttl_ms"] = state_ttl_ms
-        elif backend.startswith("event_time"):
-            from stream_sentinel_spark.streaming.state import (
-                stateful_alerts_event_time,
-            )
-
-            stateful_fn = stateful_alerts_event_time
-            extra["state_ttl_ms"] = state_ttl_ms
-            if backend == "event_time_bucketed":
-                extra["n_buckets"] = n_state_buckets
-        else:
-            stateful_fn = stateful_alerts
-            extra["state_ttl_ms"] = state_ttl_ms
+        stateful_fn = (
+            stateful_alerts_event_time if backend == "event_time" else stateful_alerts
+        )
         branches.append(
             stateful_fn(
                 payload,
@@ -134,7 +114,7 @@ def compile_rules_streaming(
                 time_col=time_col,
                 order_cols=order_cols,
                 rule_indexes=[i for i, _ in stateful],
-                **extra,
+                state_ttl_ms=state_ttl_ms,
             )
         )
     return reduce(lambda a, b: a.unionByName(b), branches)

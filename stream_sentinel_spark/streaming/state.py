@@ -1,4 +1,4 @@
-"""Per-key stateful streaming detectors — W1/W2 on `applyInPandasWithState`.
+"""Stateful streaming detectors — W1/W2 on `applyInPandasWithState`.
 
 The reference keeps one `ValueState<List<AnomalyDetector>>` per key and
 runs every detector on every event in arrival order
@@ -6,11 +6,31 @@ runs every detector on every event in arrival order
 per-event trailing-window operator (grouped `window()` fires per window,
 not per event — SURVEY §7.4.1), so this is the one place the engine
 drops to the custom-stateful escape hatch: ONE `applyInPandasWithState`
-processor per query that owns ALL stateful rules for a key — a single
-key shuffle and a single state store, mirroring the reference's single
-keyBy (StreamSentinelJob.java:121-124).
+processor per query that owns ALL stateful rules — a single shuffle and
+a single state store, mirroring the reference's single keyBy
+(StreamSentinelJob.java:121-124).
 
-State is a JSON blob per key: ``{"r<idx>": [..]}`` — rate rules hold the
+Two paths, both KEY-PACKED:
+
+- :func:`stateful_alerts` — arrival order, the reference's semantics;
+- :func:`stateful_alerts_event_time` — event-time order up to the
+  watermark (a reorder buffer flushed as the watermark passes).
+
+Both group by ``xxhash64(key) mod N_STATE_BUCKETS`` and keep ONE state
+blob per bucket: a JSON dict of key → detector state, so one framework
+round trip (Arrow group slice, state get/put, Python invocation) serves
+every key in the bucket. At a few thousand keys a bucket holds about one
+key; past that keys pack, which is where per-key grouping stopped
+scaling (8.15× at 295k keys, STRESS_r05_streaming.json).
+
+``N_STATE_BUCKETS`` is a fixed constant, deliberately NOT derived from
+the session (shuffle partitions, cores) or the data: the bucket id is
+the state store's grouping key, so a restart whose count differed would
+hash keys into other buckets than the ones holding their state and
+silently restart their detectors empty. Changing it is a state-format
+change that needs a fresh checkpoint.
+
+A key's detector state is ``{"r<idx>": [..]}`` — rate rules hold the
 timestamp deque in epoch ms (bounded by the window duration,
 RateSpikeDetector.java:85-90), statistical rules the last-N value deque
 (bounded by windowSize, StatisticalOutlierDetector.java:124-127). Both
@@ -52,6 +72,10 @@ _KEY = "__ss_key"
 _BKT = "__ss_bkt"
 _TSUS = "__ss_ts_us"
 _EVMAP = "__ss_event"
+
+#: Hash buckets of both stateful paths — part of the checkpointed state
+#: key, so fixed (see the module docstring), never read from config.
+N_STATE_BUCKETS = 4096
 
 #: Output schema of the stateful branch — identical to functions.alerts
 #: ALERT_FIELDS except alert_ts carried as epoch micros (converted back
@@ -178,8 +202,7 @@ def _eval_cusum(rule_spec: dict, hist: list, v: float) -> str | None:
 def _order_sort_keys(pdf, order_cols: tuple[str, ...]) -> list:
     """Null-safe lexsort key arrays for the tie-break columns, least-
     significant first (np.lexsort treats the LAST key as primary, so
-    callers append ts — and, for bucketed groups, the key column —
-    after these). pandas sort_values puts NA LAST (na_position
+    callers append ts and then the key column after these). pandas sort_values puts NA LAST (na_position
     default); a raw object-array lexsort would instead raise TypeError
     on None-vs-str comparison. Each column contributes
     (value-with-filler, is-null) with is-null the more significant of
@@ -220,10 +243,10 @@ def _eval_sorted(
     hi: int,
 ) -> None:
     """Detector loop over PRE-SORTED event arrays for ONE key — rows
-    [lo, hi) of the shared arrays (slice bounds, not copies, so the
-    bucketed backend pays no per-key array slicing). Mutates ``st``
-    and appends alert columns to ``out``. The single source of the
-    detection semantics for every stateful backend."""
+    [lo, hi) of the shared arrays (slice bounds, not copies, so a
+    bucket pays no per-key array slicing). Mutates ``st`` and appends
+    alert columns to ``out``. The single source of the detection
+    semantics for both stateful paths."""
     # hoist per-rule lookups out of the event loop: the f-string state
     # key and dict fetch per (event x rule) were measurable at 100k+
     # events/batch. All three evaluators mutate hist IN PLACE, so the
@@ -255,49 +278,6 @@ def _eval_sorted(
                 out["rule_index"].append(idx)
 
 
-def _run_rules_over_batch(
-    st: dict,
-    pdfs,
-    key,
-    rule_specs: list[dict],
-    value_cols: dict[int, str],
-    order_cols: tuple[str, ...],
-):
-    """Shared per-key micro-batch evaluation: mutates ``st`` (the
-    deserialized detector state) and returns the alert columns dict.
-    Used by BOTH stateful APIs (applyInPandasWithState and
-    transformWithStateInPandas) so the detection semantics cannot
-    diverge between them."""
-    import numpy as np
-    import pandas as pd
-
-    chunks = list(pdfs)
-    pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-    out: dict[str, list] = {f.name: [] for f in ALERT_SCHEMA.fields}
-    n = len(pdf)
-    if n == 0:
-        return out
-    # arrival order within the micro-batch: event-time + tie-break
-    # (cross-batch order is arrival order, as in the reference).
-    # numpy argsort/lexsort over column arrays instead of a pandas
-    # sort_values + per-column to_list: this function runs ONCE PER KEY
-    # per micro-batch, and the pandas fixed costs (sort, reset_index,
-    # list conversion) dominated the whole streaming leg at high key
-    # cardinality (measured: ~1.4k ev/s at 295k keys, per-key overhead
-    # ~= the batch time). Both sorts are stable, so tie order beyond
-    # (ts, *order_cols) is identical.
-    ts_np = pdf[_TSUS].to_numpy()
-    if order_cols:
-        order = np.lexsort((*_order_sort_keys(pdf, order_cols), ts_np))
-    else:
-        order = np.argsort(ts_np, kind="stable")
-    ts_arr = ts_np[order]
-    ev_arr = pdf[_EVMAP].to_numpy()[order]
-    val_arr = {idx: pdf[col].to_numpy()[order] for idx, col in value_cols.items()}
-    _eval_sorted(st, key[0], rule_specs, ts_arr, ev_arr, val_arr, out, 0, n)
-    return out
-
-
 def _run_rules_over_bucket(
     states: dict,
     pdfs,
@@ -307,13 +287,11 @@ def _run_rules_over_bucket(
     last_seen: dict | None = None,
     now_ms: int = 0,
 ):
-    """Micro-batch evaluation for a BUCKET of keys (the key-packing
-    backend): one sort of the whole bucket with the key as the primary
-    sort key, then one :func:`_eval_sorted` call per key slice — so N
-    keys cost one Arrow group, one state get/put, and one lexsort
-    instead of N of each. ``states`` maps key → that key's detector
-    state (the same per-key dict :func:`_run_rules_over_batch`
-    mutates, so semantics are shared by construction). ``last_seen``
+    """Micro-batch evaluation for a BUCKET of keys: one sort of the
+    whole bucket with the key as the primary sort key, then one
+    :func:`_eval_sorted` call per key slice — so N keys cost one Arrow
+    group, one state get/put, and one lexsort instead of N of each.
+    ``states`` maps key → that key's detector state. ``last_seen``
     (when TTL is on) is stamped with ``now_ms`` for every key present."""
     import numpy as np
     import pandas as pd
@@ -345,33 +323,6 @@ def _run_rules_over_bucket(
     return out
 
 
-def _make_processor(
-    rule_specs: list[dict],
-    value_cols: dict[int, str],
-    order_cols: tuple[str, ...],
-    ttl_ms: int | None = None,
-):
-    """Build the per-key processor closure (pickled to executors)."""
-    import pandas as pd
-
-    def process(key, pdfs: Iterator, state) -> Iterator:
-        if state.hasTimedOut:
-            # idle-key eviction: the key saw no events for ttl_ms — drop
-            # its state entirely (unbounded key spaces stay bounded)
-            state.remove()
-            return
-        blob = state.get[0] if state.exists else None
-        st: dict = json.loads(blob) if blob else {}
-        out = _run_rules_over_batch(st, pdfs, key, rule_specs, value_cols, order_cols)
-        state.update((json.dumps(st),))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        if out["rule_name"]:
-            yield pd.DataFrame(out)
-
-    return process
-
-
 def _prepare_keyed(
     events: DataFrame,
     rules: Sequence[DetectionRule],
@@ -382,12 +333,13 @@ def _prepare_keyed(
     event_columns: Sequence[str] | None,
     keep_time_col: bool = False,
 ):
-    """Shared input prep for both stateful APIs: the keyed projection
-    (key, epoch-us timestamp, original-event map, order + value columns)
-    and the pickled rule specs. ``keep_time_col`` carries the RAW
-    watermarked timestamp column through the projection — required by
-    the event-time mode (projecting it away severs the watermark the
-    EventTimeTimeout needs)."""
+    """Shared input prep for both paths: the keyed projection (key,
+    epoch-us timestamp, original-event map, order + value columns, and
+    the key's hash bucket) and the pickled rule specs.
+    ``keep_time_col`` carries the RAW watermarked timestamp column
+    through the projection — required by the event-time mode
+    (projecting it away severs the watermark the EventTimeTimeout
+    needs)."""
     idxs = list(rule_indexes) if rule_indexes is not None else list(range(len(rules)))
     specs: list[dict] = []
     value_cols: dict[int, str] = {}
@@ -422,57 +374,21 @@ def _prepare_keyed(
             value_cols[idx] = vcol
             cols.append(numeric_field(events, rule.field).alias(vcol))
         specs.append(spec)
-    return events.select(*cols), specs, value_cols
-
-
-def stateful_alerts(
-    events: DataFrame,
-    rules: Sequence[DetectionRule],
-    *,
-    key_field: str,
-    time_col: str = "ts",
-    order_cols: Sequence[str] = (),
-    rule_indexes: Sequence[int] | None = None,
-    event_columns: Sequence[str] | None = None,
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """Compile the stateful rules (rate/statistical) of a rule set into
-    ONE keyed stateful branch over a streaming DataFrame.
-
-    ``rule_indexes`` preserves each rule's position in the full YAML list
-    so the union with stateless branches keeps reference emission order
-    (SURVEY §3.2).
-
-    OPERATIONAL NOTE: with ``state_ttl_ms`` set, the query uses
-    ProcessingTime timeouts, and Spark's ``availableNow``/drain triggers
-    never self-terminate under that time mode — the engine keeps
-    scheduling empty micro-batches to service (even absent) future
-    timers (observed: state fully evicted to 0 rows, 300+ empty batches
-    and counting). TTL is for CONTINUOUS jobs; batch-drain/replay runs
-    (``run_available_now``, availableNow triggers) should leave
-    ``state_ttl_ms=None``. tools/streaming_scale_stress.py drives the
-    TTL leg with a continuous trigger + explicit stop for this reason.
-
-    ``state_ttl_ms`` enables idle-key state eviction via processing-time
-    timeout: a key with no events for the TTL has its detector state
-    dropped (re-created fresh on its next event, exactly like a brand-new
-    key). The reference keeps per-key state forever
-    (AnomalyProcessFunction.java:86-90) — unbounded key cardinality at
-    100 TB needs the bound; pick TTL ≫ the largest rule window so
-    eviction never changes live-detection results."""
-    keyed, specs, value_cols = _prepare_keyed(
-        events, rules, key_field, time_col, order_cols, rule_indexes, event_columns
+    keyed = events.select(*cols).withColumn(
+        _BKT, F.pmod(F.xxhash64(F.col(_KEY)), F.lit(N_STATE_BUCKETS))
     )
-    alerts = keyed.groupBy(_KEY).applyInPandasWithState(
-        _make_processor(specs, value_cols, tuple(order_cols), state_ttl_ms),
+    return keyed, specs, value_cols
+
+
+def _apply_packed(keyed: DataFrame, process, timeout: str) -> DataFrame:
+    """Run ``process`` once per hash bucket and convert the alert
+    timestamp back from epoch micros."""
+    alerts = keyed.groupBy(_BKT).applyInPandasWithState(
+        process,
         outputStructType=ALERT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=timeout,
     )
     return alerts.select(
         "rule_name",
@@ -485,7 +401,7 @@ def stateful_alerts(
 
 
 # ---------------------------------------------------------------------------
-# Key-packing backend — amortize per-key framework cost over buckets
+# Arrival order (the reference's semantics)
 # ---------------------------------------------------------------------------
 
 def _make_bucketed_processor(
@@ -494,10 +410,10 @@ def _make_bucketed_processor(
     order_cols: tuple[str, ...],
     ttl_ms: int | None = None,
 ):
-    """Per-BUCKET processor closure: the state blob is a JSON dict of
-    key → detector state (plus key → last-seen wall-ms when TTL is on),
-    so one framework round trip (Arrow group slice + state get/put +
-    Python invocation) serves every key in the bucket."""
+    """Arrival-order per-BUCKET processor closure: the state blob is a
+    JSON dict of key → detector state (plus key → last-seen wall-ms
+    when TTL is on), so one framework round trip (Arrow group slice +
+    state get/put + Python invocation) serves every key in the bucket."""
     import time
 
     import pandas as pd
@@ -525,8 +441,8 @@ def _make_bucketed_processor(
             # contract's ProcessingTimeTimeout likewise never fires for a
             # key that has data in the trigger, however long the gap since
             # its previous batch. Only keys absent from this batch AND idle
-            # past the TTL are dropped (the per-key backend would have
-            # fired their individual timeouts at this same trigger).
+            # past the TTL are dropped (a per-key timeout would have
+            # fired at this same trigger).
             dead = [k for k, t in last.items() if now_ms - t > ttl_ms]
             for k in dead:
                 states.pop(k, None)
@@ -543,7 +459,7 @@ def _make_bucketed_processor(
     return process
 
 
-def stateful_alerts_bucketed(
+def stateful_alerts(
     events: DataFrame,
     rules: Sequence[DetectionRule],
     *,
@@ -553,178 +469,56 @@ def stateful_alerts_bucketed(
     rule_indexes: Sequence[int] | None = None,
     event_columns: Sequence[str] | None = None,
     state_ttl_ms: int | None = None,
-    n_buckets: int = 4096,
 ) -> DataFrame:
-    """:func:`stateful_alerts` with KEY PACKING — the extreme-key-
-    cardinality backend.
+    """Compile the stateful rules (rate/statistical/cusum) of a rule set
+    into ONE key-packed stateful branch over a streaming DataFrame,
+    evaluated in ARRIVAL order (within a micro-batch: by ``time_col``
+    then ``order_cols``).
 
-    The per-key backends pay a fixed framework cost per key per
-    micro-batch (Arrow group slicing, a state-store get/put, a Python
-    generator invocation, a pandas DataFrame build); at ~300k distinct
-    keys that cost dominates end-to-end (measured ~1.7k ev/s vs ~9k at
-    1.5k keys, STRESS_r04_streaming.json) even though each key's actual
-    detector work is microseconds. This backend groups by
-    ``xxhash64(key) mod n_buckets`` instead of the raw key and keeps
-    ONE state blob per bucket (a JSON dict of key → detector state), so
-    the framework cost amortizes over every key in the bucket while the
-    detection semantics stay the per-key ones — the same
-    :func:`_eval_sorted` loop runs per key slice of the bucket-sorted
-    batch, against the same per-key state dict (parity pinned in
-    tests/test_streaming_bucketed.py).
+    ``rule_indexes`` preserves each rule's position in the full YAML list
+    so the union with stateless branches keeps reference emission order
+    (SURVEY §3.2).
 
-    Sizing ``n_buckets``: target ~64–256 LIVE keys per bucket (blob
-    ser/de is linear in stored keys). At 100 TB scale buckets shard
-    across executors like any other group key — the state store holds
-    ``n_buckets`` rows instead of one per key, and hot KEYS no longer
-    each pay their own round trip. The trade: per-bucket blobs grow
-    with resident keys, so UNBOUNDED key spaces need the TTL (below) or
-    a larger ``n_buckets``; and a bucket is one task's work, so
-    ``n_buckets`` must stay ≫ the executor-core count.
+    Grouping is by ``xxhash64(key) mod N_STATE_BUCKETS`` with one state
+    blob per bucket; the same :func:`_eval_sorted` loop runs per key
+    slice of the bucket-sorted batch against that key's own detector
+    state, so results are those of a per-key processor (pinned against
+    the batch plan in tests/test_streaming_parity.py and
+    tests/test_streaming_bucketed.py). The state store holds at most
+    ``N_STATE_BUCKETS`` rows; the blobs grow with resident keys, so
+    UNBOUNDED key spaces need the TTL below.
 
-    ``state_ttl_ms`` evicts in-blob, mirroring the per-key
-    ProcessingTimeTimeout semantics: a key WITH data in the batch always
-    keeps its state (the GroupState contract never fires a timeout for a
-    key that has data in the trigger), a key absent from the batch and
-    idle past the TTL is pruned when its bucket is next invoked (the
-    same trigger at which the per-key backend would fire its individual
-    timeout), and a FULLY idle bucket is dropped whole by its
-    processing-time timeout — together the same guarantee as the
-    per-key TTL (state ∝ live keys, not keys-ever-seen)."""
+    ``state_ttl_ms`` enables idle-key state eviction: a key with no
+    events for the TTL has its detector state dropped (re-created fresh
+    on its next event, exactly like a brand-new key). It follows the
+    GroupState ProcessingTimeTimeout contract per key: a key WITH data
+    in the batch always keeps its state, a key absent from the batch
+    and idle past the TTL is pruned when its bucket is next invoked,
+    and a FULLY idle bucket is dropped whole by its processing-time
+    timeout (state ∝ live keys, not keys-ever-seen). The reference
+    keeps per-key state forever (AnomalyProcessFunction.java:86-90) —
+    unbounded key cardinality at 100 TB needs the bound; pick TTL ≫ the
+    largest rule window so eviction never changes live-detection
+    results.
+
+    OPERATIONAL NOTE: with ``state_ttl_ms`` set, the query uses
+    ProcessingTime timeouts, and Spark's ``availableNow``/drain triggers
+    never self-terminate under that time mode — the engine keeps
+    scheduling empty micro-batches to service (even absent) future
+    timers (observed: state fully evicted to 0 rows, 300+ empty batches
+    and counting). TTL is for CONTINUOUS jobs; batch-drain/replay runs
+    (``run_available_now``, availableNow triggers) should leave
+    ``state_ttl_ms=None``. tools/streaming_scale_stress.py drives the
+    TTL leg with a continuous trigger + explicit stop for this reason."""
     keyed, specs, value_cols = _prepare_keyed(
         events, rules, key_field, time_col, order_cols, rule_indexes, event_columns
     )
-    keyed = keyed.withColumn(
-        _BKT, F.pmod(F.xxhash64(F.col(_KEY)), F.lit(n_buckets))
-    )
-    alerts = keyed.groupBy(_BKT).applyInPandasWithState(
+    return _apply_packed(
+        keyed,
         _make_bucketed_processor(specs, value_cols, tuple(order_cols), state_ttl_ms),
-        outputStructType=ALERT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-    return alerts.select(
-        "rule_name",
-        "key",
-        F.timestamp_micros(F.col("alert_ts_us")).alias("alert_ts"),
-        "details",
-        "original_event",
-        "rule_index",
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas twin (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-def _make_tws_processor(
-    rule_specs: list[dict],
-    value_cols: dict[int, str],
-    order_cols: tuple[str, ...],
-    ttl_ms: int | None = None,
-):
-    """StatefulProcessor twin of :func:`_make_processor`.
-
-    Same detector semantics (the per-batch evaluation is the SAME
-    function, :func:`_run_rules_over_batch`) on Spark 4's
-    `transformWithStateInPandas` API: typed state handles, built-in
-    per-key state TTL (replacing the hand-rolled processing-time timeout
-    dance), and the RocksDB state store — the scale-path store whose
-    changelog checkpointing and memory-bounded native state survive key
-    cardinalities the in-memory HDFS-backed store cannot. Parity with
-    the applyInPandasWithState path is locked by
-    tests/test_streaming_tws.py."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SentinelProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "detectors", STATE_SCHEMA, ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timer_values) -> Iterator:
-            blob = self._state.get()
-            st: dict = json.loads(blob[0]) if blob else {}
-            out = _run_rules_over_batch(
-                st, rows, key, rule_specs, value_cols, order_cols
-            )
-            self._state.update((json.dumps(st),))
-            if out["rule_name"]:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    return SentinelProcessor()
-
-
-def stateful_alerts_tws(
-    events: DataFrame,
-    rules: Sequence[DetectionRule],
-    *,
-    key_field: str,
-    time_col: str = "ts",
-    order_cols: Sequence[str] = (),
-    rule_indexes: Sequence[int] | None = None,
-    event_columns: Sequence[str] | None = None,
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """:func:`stateful_alerts` on `transformWithStateInPandas`.
-
-    Drop-in alternative backend with identical output (same keyed
-    projection, same per-batch evaluation function, same output schema).
-    Requires the RocksDB state store provider::
-
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-
-    State TTL here is the API's built-in per-value TTL (state expires
-    ttl_ms after its last update) — operationally equivalent to the
-    processing-time-timeout eviction of the default backend: an idle
-    key's detector state disappears and the key restarts fresh.
-
-    Also requires the ``protobuf`` Python package (the
-    transformWithState state-server wire protocol) — probed here with
-    an actionable error, like the Kafka connector gate in
-    streaming/sources.py, because a missing dependency otherwise
-    surfaces as an opaque mid-query "driver worker crashed"."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise RuntimeError(
-            "stateful_alerts_tws needs the 'protobuf' Python package "
-            "(pip install protobuf) — transformWithStateInPandas uses a "
-            "protobuf state-server protocol. Use stateful_alerts (the "
-            "applyInPandasWithState backend, no extra deps) instead."
-        ) from exc
-    keyed, specs, value_cols = _prepare_keyed(
-        events, rules, key_field, time_col, order_cols, rule_indexes, event_columns
-    )
-    alerts = keyed.groupBy(_KEY).transformWithStateInPandas(
-        statefulProcessor=_make_tws_processor(
-            specs, value_cols, tuple(order_cols), state_ttl_ms
-        ),
-        outputStructType=ALERT_SCHEMA,
-        outputMode="Append",
-        timeMode="ProcessingTime" if state_ttl_ms is not None else "None",
-    )
-    return alerts.select(
-        "rule_name",
-        "key",
-        F.timestamp_micros(F.col("alert_ts_us")).alias("alert_ts"),
-        "details",
-        "original_event",
-        "rule_index",
+        GroupStateTimeout.ProcessingTimeTimeout
+        if state_ttl_ms is not None
+        else GroupStateTimeout.NoTimeout,
     )
 
 
@@ -736,16 +530,15 @@ def _make_event_time_flush_processor(
     rule_specs: list[dict],
     value_cols: dict[int, str],
     order_cols: tuple[str, ...],
-    bucketed: bool,
     ttl_ms: int | None = None,
 ):
-    """ONE implementation of the event-time flush loop for BOTH the
-    per-key and the key-packed modes (they differ only in the group
-    granularity), so the flush semantics cannot drift between them:
-    buffer arriving rows, and on each watermark advance evaluate the
-    buffered prefix with ``ts ≤ watermark`` in (ts, *order_cols) order
-    — per key, via the shared detection loop (:func:`_eval_sorted`
-    through :func:`_run_rules_over_batch` / :func:`_run_rules_over_bucket`).
+    """Event-time per-BUCKET processor closure: buffer arriving rows,
+    and on each watermark advance evaluate the buffered prefix with
+    ``ts ≤ watermark`` in (ts, *order_cols) order — per key, via the
+    shared detection loop (:func:`_eval_sorted` through
+    :func:`_run_rules_over_bucket`). The state blob holds the pending
+    buffer (``buf``), key → detector state (``det``) and, with TTL,
+    key → last flushed event ms (``last``).
 
     The reference processes in ARRIVAL order (AnomalyProcessFunction
     consumes the Flink stream as delivered; SURVEY §2.5 T3) — shuffled
@@ -760,7 +553,7 @@ def _make_event_time_flush_processor(
     operator — the standard watermark contract.
 
     STATE BOUNDS (all watermark-driven, hence DETERMINISTIC and
-    replay-stable — unlike the arrival-order backends' wall-clock TTL):
+    replay-stable — unlike the arrival-order path's wall-clock TTL):
 
     - the pending buffer is bounded by events within the
       out-of-orderness window (flushed as the watermark passes them);
@@ -781,8 +574,7 @@ def _make_event_time_flush_processor(
     """
     import pandas as pd
 
-    key_cols = [_KEY] if bucketed else []
-    buf_cols = [*key_cols, _TSUS, _EVMAP, *order_cols, *value_cols.values()]
+    buf_cols = [_KEY, _TSUS, _EVMAP, *order_cols, *value_cols.values()]
     rate_windows = [
         ("r%d" % s["rule_index"], s["window_seconds"] * 1000)
         for s in rule_specs
@@ -870,66 +662,48 @@ def _make_event_time_flush_processor(
                 json.loads(s) if isinstance(s, str) else s
                 for s in ready_buf[_EVMAP]
             ]
-            frame = [pd.DataFrame(ready_buf, columns=buf_cols)]
-            if bucketed:
-                out = _run_rules_over_bucket(
-                    st["det"], frame, rule_specs, value_cols, order_cols
-                )
-            else:
-                out = _run_rules_over_batch(
-                    st["det"], frame, key, rule_specs, value_cols, order_cols
-                )
+            out = _run_rules_over_bucket(
+                st["det"],
+                [pd.DataFrame(ready_buf, columns=buf_cols)],
+                rule_specs,
+                value_cols,
+                order_cols,
+            )
             if ttl_ms is not None:
-                if bucketed:
-                    lt = st.setdefault("last", {})
-                    for k, t in zip(ready_buf[_KEY], ready_buf[_TSUS]):
-                        tms = t // 1000
-                        if tms > lt.get(k, -1):
-                            lt[k] = tms
-                else:
-                    # max commutes with the (monotone) floor division
-                    st["last"] = max(
-                        st.get("last") or 0, max(ready_buf[_TSUS]) // 1000
-                    )
+                lt = st.setdefault("last", {})
+                for k, t in zip(ready_buf[_KEY], ready_buf[_TSUS]):
+                    tms = t // 1000
+                    if tms > lt.get(k, -1):
+                        lt[k] = tms
         # watermark-expired rate windows + whole-key eviction
-        pend_keys = set(pending_buf[_KEY]) if bucketed else None
+        pend_keys = set(pending_buf[_KEY])
         next_fire: list[int] = []
-        if bucketed:
-            lt = st.get("last", {})
-            dead = []
-            for k, det in st["det"].items():
-                _prune_rate(det, wm_ms)
-                if k in pend_keys:
-                    continue
-                at = _evict_at(det, lt.get(k), wm_ms)
-                # STRICT: an entry with expiry == wm still counts for a
-                # row arriving exactly at the watermark (rate eviction
-                # keeps boundary entries), so evict only once wm passes
-                if at is not None and at < wm_ms:
-                    dead.append(k)
-                elif at is not None:
-                    next_fire.append(at)
-            for k in dead:
-                del st["det"][k]
-                lt.pop(k, None)
-            empties = [k for k, d in st["det"].items() if not any(d.values())]
-            for k in empties:
-                del st["det"][k]
-                lt.pop(k, None)
-            empty = not n_pending and not st["det"]
-        else:
-            _prune_rate(st["det"], wm_ms)
-            if not n_pending:
-                at = _evict_at(st["det"], st.get("last"), wm_ms)
-                if at is not None and at < wm_ms:  # strict — see above
-                    st["det"] = {}
-                elif at is not None:
-                    next_fire.append(at)
-            empty = not n_pending and not any(st["det"].values())
+        lt = st.get("last", {})
+        dead = []
+        for k, det in st["det"].items():
+            _prune_rate(det, wm_ms)
+            if k in pend_keys:
+                continue
+            at = _evict_at(det, lt.get(k), wm_ms)
+            # STRICT: an entry with expiry == wm still counts for a
+            # row arriving exactly at the watermark (rate eviction
+            # keeps boundary entries), so evict only once wm passes
+            if at is not None and at < wm_ms:
+                dead.append(k)
+            elif at is not None:
+                next_fire.append(at)
+        for k in dead:
+            del st["det"][k]
+            lt.pop(k, None)
+        empties = [k for k, d in st["det"].items() if not any(d.values())]
+        for k in empties:
+            del st["det"][k]
+            lt.pop(k, None)
+        empty = not n_pending and not st["det"]
         if empty:
             # nothing buffered and no detector window holds history —
             # drop the state entirely instead of persisting an empty
-            # blob forever; the key restarts fresh if it speaks again
+            # blob forever; keys restart fresh if they speak again
             state.remove()
         else:
             state.update((json.dumps(st),))
@@ -946,34 +720,6 @@ def _make_event_time_flush_processor(
     return process
 
 
-def _make_event_time_processor(
-    rule_specs: list[dict],
-    value_cols: dict[int, str],
-    order_cols: tuple[str, ...],
-    ttl_ms: int | None = None,
-):
-    """Per-key event-time processor — see
-    :func:`_make_event_time_flush_processor`."""
-    return _make_event_time_flush_processor(
-        rule_specs, value_cols, order_cols, bucketed=False, ttl_ms=ttl_ms
-    )
-
-
-def _make_event_time_bucketed_processor(
-    rule_specs: list[dict],
-    value_cols: dict[int, str],
-    order_cols: tuple[str, ...],
-    ttl_ms: int | None = None,
-):
-    """Key-packed event-time processor — see
-    :func:`_make_event_time_flush_processor` (one buffer + detector
-    blob per hash bucket; measured 11.14× the per-key mode at 295 k
-    keys, STRESS_r05_eventtime.json)."""
-    return _make_event_time_flush_processor(
-        rule_specs, value_cols, order_cols, bucketed=True, ttl_ms=ttl_ms
-    )
-
-
 def stateful_alerts_event_time(
     events: DataFrame,
     rules: Sequence[DetectionRule],
@@ -983,7 +729,6 @@ def stateful_alerts_event_time(
     order_cols: Sequence[str] = (),
     rule_indexes: Sequence[int] | None = None,
     event_columns: Sequence[str] | None = None,
-    n_buckets: int | None = None,
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """:func:`stateful_alerts` in EVENT-TIME order: detection windows
@@ -995,19 +740,14 @@ def stateful_alerts_event_time(
     it), and rows arriving LATER than the watermark are dropped by the
     engine before the processor (the standard watermark lateness
     contract) — the two inherent prices of ordering; the arrival-order
-    backends (:func:`stateful_alerts` / :func:`stateful_alerts_tws`)
-    keep the reference's immediate-emission, evaluate-everything
-    behavior.
+    path (:func:`stateful_alerts`) keeps the reference's
+    immediate-emission, evaluate-everything behavior.
 
-    Runs on the dependency-free applyInPandasWithState backend with
-    EventTimeTimeout; same keyed projection and evaluation function as
-    the other backends, so per-flush semantics cannot diverge.
-
-    ``n_buckets`` enables KEY PACKING for this mode too (the
-    extreme-cardinality treatment of :func:`stateful_alerts_bucketed`):
-    one buffer+state blob per ``xxhash64(key) mod n_buckets`` bucket,
-    flushed per key slice in the same (ts, *order_cols) order — parity
-    with the per-key mode pinned in tests/test_streaming_event_time.py.
+    Key-packed like the arrival path: one buffer + detector blob per
+    ``xxhash64(key) mod N_STATE_BUCKETS`` bucket, flushed per key slice
+    in (ts, *order_cols) order through the same evaluation function,
+    with EventTimeTimeout (batch parity pinned in
+    tests/test_streaming_event_time.py).
 
     State bounds: the pending buffer is watermark-bounded and expired
     rate windows are pruned automatically (both deterministic);
@@ -1021,33 +761,10 @@ def stateful_alerts_event_time(
         events, rules, key_field, time_col, order_cols, rule_indexes,
         event_columns, keep_time_col=True,
     )
-    if n_buckets is None:
-        alerts = keyed.groupBy(_KEY).applyInPandasWithState(
-            _make_event_time_processor(
-                specs, value_cols, tuple(order_cols), state_ttl_ms
-            ),
-            outputStructType=ALERT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    else:
-        alerts = keyed.withColumn(
-            _BKT, F.pmod(F.xxhash64(F.col(_KEY)), F.lit(n_buckets))
-        ).groupBy(_BKT).applyInPandasWithState(
-            _make_event_time_bucketed_processor(
-                specs, value_cols, tuple(order_cols), state_ttl_ms
-            ),
-            outputStructType=ALERT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    return alerts.select(
-        "rule_name",
-        "key",
-        F.timestamp_micros(F.col("alert_ts_us")).alias("alert_ts"),
-        "details",
-        "original_event",
-        "rule_index",
+    return _apply_packed(
+        keyed,
+        _make_event_time_flush_processor(
+            specs, value_cols, tuple(order_cols), state_ttl_ms
+        ),
+        GroupStateTimeout.EventTimeTimeout,
     )

@@ -36,6 +36,11 @@ def spark_alerts(df, rules, key_field="userId", order_cols=()):
     ]
 
 
+@pytest.mark.skipif(
+    not os.path.exists(SAMPLE_PATH),
+    reason=f"reference example corpus not present at {SAMPLE_PATH}; "
+    "the property-based parity tests below still run",
+)
 def test_sample_events_golden(spark):
     rules = load_rules()  # packaged default = reference config/rules.yml
     df = events_from_json(spark, SAMPLE_PATH)

@@ -1,16 +1,19 @@
-"""Key-packing stateful backend ≡ per-key backend.
+"""Key-packed arrival-order path ≡ the batch plan.
 
-stateful_alerts_bucketed groups by a hash bucket of the key and packs
-many per-key detector states into one blob; the detection loop per key
-slice is the SAME function the per-key backends run (_eval_sorted), so
-this module pins what the sharing cannot: the bucket sort (key-primary,
-then ts, then tie-breaks), the blob round trip, the in-blob TTL
-eviction, and the backend switch plumbing."""
+stateful_alerts groups by a hash bucket of the key and packs many
+per-key detector states into one blob; the detection loop per key
+slice is the SAME function for every key (_eval_sorted). This module
+pins what the packing adds — the bucket sort (key-primary, then ts,
+then tie-breaks), the blob round trip across micro-batches, the
+in-blob TTL eviction, the state-store provider and the backend switch
+plumbing — against compile_rules, the batch plan the DuckDB oracle
+checks."""
 
 from __future__ import annotations
 
 import pytest
 
+from stream_sentinel_spark.plans.pipeline import compile_rules
 from stream_sentinel_spark.rules import DetectionRule
 from stream_sentinel_spark.sources.batch import load_table
 from stream_sentinel_spark.streaming import (
@@ -18,12 +21,14 @@ from stream_sentinel_spark.streaming import (
     read_file_stream,
     run_available_now,
 )
-from stream_sentinel_spark.streaming.state import (
-    stateful_alerts,
-    stateful_alerts_bucketed,
-)
+from stream_sentinel_spark.streaming import state
+from stream_sentinel_spark.streaming.state import stateful_alerts
 
 SF_DIR = "/root/testdata/sf0.001"
+
+ROCKSDB = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 RULES = [
     DetectionRule(
@@ -52,75 +57,96 @@ def events_src(spark, tmp_path_factory):
     return path, ev
 
 
-def _run(spark, events_src, backend_fn, tag, **kw):
+@pytest.fixture(scope="module")
+def batch_alerts(events_src):
+    _, ev = events_src
+    rows = compile_rules(
+        ev, RULES, key_field="user_id", time_col="ts", order_cols=("event_id",)
+    ).collect()
+    assert len(rows) > 0, "fixture rules must fire on the test data"
+    return rows
+
+
+def _run(spark, events_src, tag, **kw):
     path, ev = events_src
     stream = read_file_stream(spark, path, ev.schema, time_col="ts", watermark=None)
-    alerts = backend_fn(
+    alerts = stateful_alerts(
         stream, RULES, key_field="user_id", time_col="ts",
         order_cols=("event_id",), **kw,
     )
     return run_available_now(alerts, query_name=f"bkt_{tag}")
 
 
-def test_bucketed_matches_per_key(spark, events_src):
-    base = _run(spark, events_src, stateful_alerts, "base")
-    assert len(base) > 0, "fixture rules must fire on the test data"
-    bkt = _run(spark, events_src, stateful_alerts_bucketed, "packed")
-    assert sorted(map(_alert_key, base)) == sorted(map(_alert_key, bkt))
+def test_bucketed_matches_batch_plan(spark, events_src, batch_alerts):
+    got = _run(spark, events_src, "packed")
+    assert sorted(map(_alert_key, got)) == sorted(map(_alert_key, batch_alerts))
     # original_event survives the packed-blob round trip (ingest_ts is
-    # a wall-clock stamp that differs between any two runs — drop it)
+    # the stream's wall-clock stamp, absent from the batch frame)
     def payload(r):
         return {k: v for k, v in r["original_event"].items() if k != "ingest_ts"}
 
-    b = {_alert_key(r): payload(r) for r in base}
-    p = {_alert_key(r): payload(r) for r in bkt}
-    k = next(iter(b))
-    assert b[k] == p[k] and len(b[k]) > 3
+    b = {_alert_key(r): payload(r) for r in batch_alerts}
+    p = {_alert_key(r): payload(r) for r in got}
+    assert b == p and len(next(iter(b.values()))) > 3
 
 
-def test_bucketed_packs_keys(spark, events_src):
-    """With n_buckets=1 every key lands in ONE blob and the results must
+def test_bucketed_packs_keys(spark, events_src, batch_alerts, monkeypatch):
+    """With ONE bucket every key lands in ONE blob and the results must
     still match — the degenerate case that proves the per-key slicing
     inside the bucket, not the hash spread, carries the semantics."""
-    base = _run(spark, events_src, stateful_alerts, "base1")
-    one = _run(spark, events_src, stateful_alerts_bucketed, "one", n_buckets=1)
-    assert sorted(map(_alert_key, base)) == sorted(map(_alert_key, one))
+    monkeypatch.setattr(state, "N_STATE_BUCKETS", 1)
+    one = _run(spark, events_src, "one")
+    assert sorted(map(_alert_key, one)) == sorted(map(_alert_key, batch_alerts))
 
 
-def test_bucketed_state_survives_batches(spark, events_src, tmp_path):
+def test_bucketed_state_survives_batches(spark, events_src, batch_alerts, tmp_path):
     """Detector windows must accumulate ACROSS micro-batches through the
-    packed blob: stream the same events one file per trigger and compare
-    against the single-batch run (same construction as the cross-batch
-    guarantees in test_streaming_parity)."""
-    path, ev = events_src
+    packed blob: stream the events as four ts-ranged files, one per
+    trigger, in ts order (mtimes forced increasing — the file source
+    picks files by modification time), so arrival order is event-time
+    order and the result must equal the batch plan."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    _, ev = events_src
     multi = str(tmp_path / "multi")
-    ev.repartition(4).write.mode("overwrite").parquet(multi)
+    lo, hi = ev.agg(F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))).head()
+    edges = [lo + (hi - lo) * i // 4 for i in range(1, 4)]
+    bounds = [None, *edges, None]
+    seen: set = set()
+    base_mtime = None
+    for i in range(4):
+        cond = F.lit(True)
+        if bounds[i] is not None:
+            cond = cond & (F.unix_micros("ts") >= bounds[i])
+        if bounds[i + 1] is not None:
+            cond = cond & (F.unix_micros("ts") < bounds[i + 1])
+        ev.filter(cond).coalesce(1).write.mode("append").parquet(multi)
+        new = {f for f in os.listdir(multi) if f.endswith(".parquet")} - seen
+        assert len(new) == 1
+        f = f"{multi}/{new.pop()}"
+        if base_mtime is None:
+            base_mtime = os.stat(f).st_mtime
+        os.utime(f, (base_mtime, base_mtime + 2.0 * i))
+        seen = {f for f in os.listdir(multi) if f.endswith(".parquet")}
     stream = read_file_stream(
         spark, multi, ev.schema, time_col="ts", watermark=None,
         max_files_per_trigger=1,
     )
-    alerts = stateful_alerts_bucketed(
+    alerts = stateful_alerts(
         stream, RULES, key_field="user_id", time_col="ts",
         order_cols=("event_id",),
     )
-    got = run_available_now(alerts, query_name="bkt_multi")
-    base = _run(spark, events_src, stateful_alerts, "base2")
-    # cross-batch arrival order differs from the single-batch sort, so
-    # compare the rate alerts by count per key and the statistical set
-    # exactly where order is deterministic — mirror: the per-key backend
-    # on the SAME multi-file stream is the true twin
-    stream2 = read_file_stream(
-        spark, multi, ev.schema, time_col="ts", watermark=None,
-        max_files_per_trigger=1,
+    q = (
+        alerts.writeStream.format("memory").queryName("bkt_multi")
+        .outputMode("append").trigger(availableNow=True).start()
     )
-    alerts2 = stateful_alerts(
-        stream2, RULES, key_field="user_id", time_col="ts",
-        order_cols=("event_id",),
-    )
-    want = run_available_now(alerts2, query_name="key_multi")
-    assert sorted(map(_alert_key, got)) == sorted(map(_alert_key, want))
-    assert len(got) > 0
-    assert len(base) > 0  # sanity: the fixture fires either way
+    q.awaitTermination()
+    got = spark.table("bkt_multi").collect()
+    data_batches = [p for p in q.recentProgress if p.numInputRows]
+    assert len(data_batches) == 4, "one micro-batch per ts-ranged file"
+    assert sorted(map(_alert_key, got)) == sorted(map(_alert_key, batch_alerts))
 
 
 def test_bucketed_ttl_evicts_idle_keys(spark, tmp_path):
@@ -159,9 +185,9 @@ def test_bucketed_ttl_evicts_idle_keys(spark, tmp_path):
             spark, src, schema, time_col="ts", watermark=None,
             max_files_per_trigger=1,
         )
-        alerts = stateful_alerts_bucketed(
+        alerts = stateful_alerts(
             stream, rules, key_field="user_id", time_col="ts",
-            order_cols=("event_id",), state_ttl_ms=ttl_ms, n_buckets=4,
+            order_cols=("event_id",), state_ttl_ms=ttl_ms,
         )
         # manual two-trigger drive: batch 1 (3 events), sleep past the
         # TTL, batch 2 (2 events). ProcessingTime timeouts keep
@@ -211,7 +237,7 @@ def test_ttl_never_evicts_a_key_with_data_in_the_batch():
     previous batch — so the in-blob eviction must prune AFTER stamping
     the batch's keys. Driven at the processor level with an ancient
     last-seen stamp: the key's rate window must ACCUMULATE across the
-    gap (per-key-backend behavior), not restart."""
+    gap (per-key timeout behavior), not restart."""
     import json as _json
 
     import pandas as pd
@@ -262,33 +288,73 @@ def test_ttl_never_evicts_a_key_with_data_in_the_batch():
     blob_in = _json.dumps(
         {"s": {"k1": {"r0": [0, 1]}}, "t": {"k1": 0}}
     )
-    state = FakeState(blob_in)
+    state_ = FakeState(blob_in)
     # batch arrives much later than ttl=500ms, but k1 HAS data in it —
     # the retained window (2 old events) + 2 new events crosses the
     # threshold of 3, which only happens if the state survived
-    out = list(proc(("bkt",), iter([pdf([3, 4])]), state))
+    out = list(proc(("bkt",), iter([pdf([3, 4])]), state_))
     assert out and list(out[0]["rule_name"]) == ["burst"], (
         "retained rate window must fire on the 4th cumulative event"
     )
-    kept = _json.loads(state._blob)
+    kept = _json.loads(state_._blob)
     assert "k1" in kept["s"] and len(kept["s"]["k1"]["r0"]) == 4
     # an idle OTHER key with a stale stamp in the same blob is pruned
     blob_in = _json.dumps(
         {"s": {"k1": {"r0": [0]}, "idle": {"r0": [0]}}, "t": {"k1": 0, "idle": 0}}
     )
-    state = FakeState(blob_in)
-    list(proc(("bkt",), iter([pdf([5])]), state))
-    kept = _json.loads(state._blob)
+    state_ = FakeState(blob_in)
+    list(proc(("bkt",), iter([pdf([5])]), state_))
+    kept = _json.loads(state_._blob)
     assert "idle" not in kept["s"] and "k1" in kept["s"]
 
 
-def test_compile_rules_streaming_bucketed_switch(spark, events_src):
+def test_compile_rules_streaming_bucketed_switch(spark, events_src, batch_alerts):
+    """The compiler's default stateful path is the key-packed arrival
+    path: grouped by the hash bucket, and equal to the batch plan."""
     path, ev = events_src
     stream = read_file_stream(spark, path, ev.schema, time_col="ts", watermark=None)
     alerts = compile_rules_streaming(
         stream, RULES, key_field="user_id", time_col="ts",
-        order_cols=("event_id",), backend="bucketed", n_state_buckets=64,
+        order_cols=("event_id",),
     )
+    plan = alerts._jdf.queryExecution().analyzed().toString()
+    assert "FlatMapGroupsInPandasWithState" in plan and "__ss_bkt" in plan
     got = run_available_now(alerts, query_name="bkt_compiled")
-    want = _run(spark, events_src, stateful_alerts, "base3")
-    assert sorted(map(_alert_key, got)) == sorted(map(_alert_key, want))
+    assert sorted(map(_alert_key, got)) == sorted(map(_alert_key, batch_alerts))
+
+
+def test_compile_rules_streaming_backend_param(spark, events_src):
+    """The backend switch accepts exactly the two paths and rejects
+    every other name — including the retired per-key, transformWith-
+    State and n-bucket backends — before any query starts."""
+    path, ev = events_src
+    stream = read_file_stream(spark, path, ev.schema, time_col="ts", watermark=None)
+    for name in ("flink", "aiws", "tws", "bucketed"):
+        with pytest.raises(ValueError, match="unknown stateful backend"):
+            compile_rules_streaming(
+                stream, RULES, key_field="user_id", time_col="ts", backend=name
+            )
+    # "event_time_bucketed": the earlier name of "event_time", still
+    # passed by perfbench's detect-late workload
+    for name in ("arrival", "event_time", "event_time_bucketed"):
+        compile_rules_streaming(
+            stream, RULES, key_field="user_id", time_col="ts", backend=name
+        )
+
+
+def test_aiws_on_rocksdb_matches_default_store(spark, events_src):
+    """The bench's measured streaming path: the applyInPandasWithState
+    arrival path on the RocksDB state store provider must produce the
+    identical alert set to the default HDFS-backed store."""
+    base = _run(spark, events_src, "mem")
+    assert len(base) > 0
+    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
+    try:
+        rocks = _run(spark, events_src, "aiws_rocks")
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        else:
+            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    assert sorted(map(_alert_key, base)) == sorted(map(_alert_key, rocks))

@@ -216,7 +216,7 @@ def test_null_order_value_sorts_last_like_pandas():
     fire twice."""
     import pandas as pd
 
-    from stream_sentinel_spark.streaming.state import _run_rules_over_batch
+    from stream_sentinel_spark.streaming.state import _run_rules_over_bucket
 
     spec = {
         "rule_index": 0, "name": "drift", "type": "cusum", "field": "value",
@@ -225,6 +225,7 @@ def test_null_order_value_sorts_last_like_pandas():
     }
     pdf = pd.DataFrame(
         {
+            "__ss_key": ["k", "k"],
             "__ss_ts_us": [1_000_000, 1_000_000],
             "__ss_event": [{"which": "null-order"}, {"which": "a-order"}],
             "event_id": [None, "a"],
@@ -232,8 +233,8 @@ def test_null_order_value_sorts_last_like_pandas():
         }
     )
     st: dict = {}
-    out = _run_rules_over_batch(
-        st, iter([pdf]), ("k",), [spec], {0: "__ss_v0"}, ("event_id",)
+    out = _run_rules_over_bucket(
+        st, iter([pdf]), [spec], {0: "__ss_v0"}, ("event_id",)
     )
     assert out["rule_name"] == ["drift"], "exactly one alert => 'a' ran first"
     assert out["original_event"] == [{"which": "null-order"}]
@@ -249,7 +250,7 @@ def test_null_order_value_object_int_column():
     CUSUM-observable construction as the string-column test above)."""
     import pandas as pd
 
-    from stream_sentinel_spark.streaming.state import _run_rules_over_batch
+    from stream_sentinel_spark.streaming.state import _run_rules_over_bucket
 
     spec = {
         "rule_index": 0, "name": "drift", "type": "cusum", "field": "value",
@@ -258,6 +259,7 @@ def test_null_order_value_object_int_column():
     }
     pdf = pd.DataFrame(
         {
+            "__ss_key": ["k", "k"],
             "__ss_ts_us": [1_000_000, 1_000_000],
             "__ss_event": [{"which": "null-order"}, {"which": "int-order"}],
             "seq": pd.Series([None, 7], dtype="object"),
@@ -266,8 +268,8 @@ def test_null_order_value_object_int_column():
     )
     assert pdf["seq"].dtype == object and isinstance(pdf["seq"][1], int)
     st: dict = {}
-    out = _run_rules_over_batch(
-        st, iter([pdf]), ("k",), [spec], {0: "__ss_v0"}, ("seq",)
+    out = _run_rules_over_bucket(
+        st, iter([pdf]), [spec], {0: "__ss_v0"}, ("seq",)
     )
     assert out["rule_name"] == ["drift"], "exactly one alert => 7 ran first"
     assert out["original_event"] == [{"which": "null-order"}]

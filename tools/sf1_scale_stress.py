@@ -345,8 +345,9 @@ def run(out_path: str, sf_dir: str = "/root/testdata/sf0.1") -> dict:
     rec["batch_alerts"] = batch_alerts.count()
 
     for mode, backend, wm in (
-        ("arrival_bucketed", "bucketed", None),
-        ("event_time_bucketed", "event_time_bucketed", DEFAULT_WATERMARK),
+        # mode names keep STRESS_r07_sf1.json's record keys
+        ("arrival_bucketed", "arrival", None),
+        ("event_time_bucketed", "event_time", DEFAULT_WATERMARK),
     ):
         out = f"{root}/alerts_{mode}"
         stream = read_file_stream(

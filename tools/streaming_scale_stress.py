@@ -10,24 +10,20 @@ full 3-rule pipeline on the RocksDB state store, and measures:
 
 - throughput + micro-batch latencies at 300k events / ~295k distinct
   keys across 6 micro-batches;
-- state growth WITHOUT TTL: numRowsTotal == every key ever seen (the
-  unbounded-by-default reality, reported from the engine's own
-  stateOperators metrics); and
-- state bounded WITH the idle-key TTL (state_ttl_ms): churned keys are
-  evicted between batches, so final state rows collapse to ~the live
-  tail — the knob that makes unbounded-cardinality streams survivable.
+- state rows WITHOUT TTL: bounded by the hash-bucket count
+  (state.N_STATE_BUCKETS), not by the ~295k keys ever seen — key
+  packing puts ~72 keys in each bucket's blob (reported from the
+  engine's own stateOperators metrics); and
+- state evicted WITH the idle-key TTL (state_ttl_ms): churned keys are
+  pruned from their blobs and fully idle buckets dropped, so final
+  state rows collapse — the knob that keeps blob sizes bounded on
+  unbounded-cardinality streams.
 
 Alert parity is asserted between the two runs (TTL only evicts keys
 whose windows expired; with window_seconds << ttl semantics preserved
 for the hot keys — here the churn keys fire nothing, so alert sets
-must be IDENTICAL).
-
-Round 5 adds the KEY-PACKING backend legs (backend="bucketed",
-stateful_alerts_bucketed): same stream, same rules, state grouped into
-4,096 hash buckets so the per-key framework round trip — the measured
-bound at this cardinality — amortizes over ~72 keys/bucket. Alert
-parity against the per-key legs is asserted, and the speedup is
-recorded.
+must be IDENTICAL). STRESS_r05_streaming.json also holds the retired
+per-key legs (the 8.15x packing speedup) as history.
 
 Run:  python tools/streaming_scale_stress.py [--out STRESS_r05_streaming.json]
 """
@@ -114,7 +110,7 @@ def _make_stream_files(spark, src: str) -> None:
         )
 
 
-def _run(spark, src, schema, ttl_ms, backend="aiws"):
+def _run(spark, src, schema, ttl_ms):
     from stream_sentinel_spark.plans.corpus import DEFAULT_RULES
     from stream_sentinel_spark.streaming import compile_rules_streaming, read_file_stream
 
@@ -130,12 +126,12 @@ def _run(spark, src, schema, ttl_ms, backend="aiws"):
         )
         alerts = compile_rules_streaming(
             stream, DEFAULT_RULES, key_field="user_id", time_col="ts",
-            order_cols=("event_id",), state_ttl_ms=ttl_ms, backend=backend,
+            order_cols=("event_id",), state_ttl_ms=ttl_ms,
         )
         t0 = time.perf_counter()
         writer = (
             alerts.writeStream.format("memory")
-            .queryName(f"stress_{backend}_{'ttl' if ttl_ms else 'nottl'}")
+            .queryName(f"stress_{'ttl' if ttl_ms else 'nottl'}")
             .outputMode("append")
             .option("checkpointLocation", ckpt)
         )
@@ -165,9 +161,7 @@ def _run(spark, src, schema, ttl_ms, backend="aiws"):
         deadline = time.time() + 15
         while time.time() < deadline and len(cap.progress) < N_BATCHES:
             time.sleep(0.25)
-        alerts_rows = spark.table(
-            f"stress_{backend}_{'ttl' if ttl_ms else 'nottl'}"
-        ).collect()
+        alerts_rows = spark.table(f"stress_{'ttl' if ttl_ms else 'nottl'}").collect()
         state_rows = [
             p["stateOperators"][0]["numRowsTotal"]
             for p in cap.progress
@@ -201,6 +195,7 @@ def _run(spark, src, schema, ttl_ms, backend="aiws"):
 
 
 def run(out_path: str) -> dict:
+    from stream_sentinel_spark.streaming.state import N_STATE_BUCKETS
     from stream_sentinel_spark.testing import stress_session
 
     spark = stress_session()
@@ -213,12 +208,6 @@ def run(out_path: str) -> dict:
 
         no_ttl = _run(spark, src, schema, ttl_ms=None)
         with_ttl = _run(spark, src, schema, ttl_ms=1)
-        # key-packing backend (round 5): same stream, same rules, state
-        # grouped into hash buckets — the per-key framework round trip
-        # (the measured bound at this cardinality) amortizes over ~72
-        # keys/bucket
-        bkt_no_ttl = _run(spark, src, schema, ttl_ms=None, backend="bucketed")
-        bkt_with_ttl = _run(spark, src, schema, ttl_ms=1, backend="bucketed")
 
         total_keys = spark.read.parquet(src).select("user_id").distinct().count()
         rec = {
@@ -226,50 +215,27 @@ def run(out_path: str) -> dict:
             "n_distinct_keys": total_keys,
             "bench_protocol_keys": 1500,
             "state_store": "rocksdb",
+            "n_buckets": N_STATE_BUCKETS,
             "no_ttl": {k: v for k, v in no_ttl.items() if k != "alerts"},
             "with_ttl": {k: v for k, v in with_ttl.items() if k != "alerts"},
-            "bucketed_no_ttl": {
-                k: v for k, v in bkt_no_ttl.items() if k != "alerts"
-            },
-            "bucketed_with_ttl": {
-                k: v for k, v in bkt_with_ttl.items() if k != "alerts"
-            },
-            "bucketed_speedup_no_ttl": round(
-                bkt_no_ttl["events_per_sec"] / no_ttl["events_per_sec"], 2
-            ),
-            "bucketed_speedup_with_ttl": round(
-                bkt_with_ttl["events_per_sec"] / with_ttl["events_per_sec"], 2
-            ),
             "alert_parity": no_ttl["alerts"] == with_ttl["alerts"],
-            "bucketed_alert_parity": (
-                bkt_no_ttl["alerts"] == no_ttl["alerts"]
-                and bkt_with_ttl["alerts"] == no_ttl["alerts"]
-            ),
             "n_alerts": len(no_ttl["alerts"]),
         }
         print(json.dumps(rec, indent=1), flush=True)
 
         # ---- assertions: the recorded claims must hold -------------------
         assert rec["alert_parity"], "TTL must not change the alert stream"
-        assert rec["bucketed_alert_parity"], (
-            "key packing must not change the alert stream"
-        )
         assert rec["n_alerts"] > 0, "hot keys must actually fire"
-        # without TTL, state accumulates every stateful key ever seen
-        assert no_ttl["state_rows_final"] >= 0.9 * total_keys * (
-            1 - 1 / CHURN_SHARE
-        ), "no-TTL state must grow with total key cardinality"
-        # with TTL, churned keys evict between batches: final state is a
-        # fraction of the corpus key count (hot keys + the last batch's
-        # churn tail at most)
+        # state rows = BUCKETS, not keys: bounded by the bucket count
+        # although the stream carries ~72x more keys
+        assert no_ttl["state_rows_final"] <= N_STATE_BUCKETS < total_keys, (
+            f"state rows {no_ttl['state_rows_final']} exceed the bucket count"
+        )
+        # with TTL, churned keys evict between batches and idle buckets
+        # drop whole: final state is a fraction of the no-TTL run's
         assert with_ttl["state_rows_final"] < 0.35 * no_ttl["state_rows_final"], (
             f"TTL state {with_ttl['state_rows_final']} not bounded vs "
             f"{no_ttl['state_rows_final']}"
-        )
-        # bucketed state rows = BUCKETS, not keys: bounded by n_buckets
-        assert bkt_no_ttl["state_rows_final"] <= 4096, (
-            f"bucketed state rows {bkt_no_ttl['state_rows_final']} "
-            "exceed the bucket count"
         )
         rec["all_assertions_pass"] = True
         with open(out_path, "w") as fh:
