@@ -1833,6 +1833,20 @@ def _kernel_frame(
     )
 
 
+def _reject_working_columns(payload: list[str], working: set[str]) -> None:
+    """Raise when a payload column would collide with an internal
+    working column of the epoch frames (names resolve
+    case-insensitively): the working column would clobber or shadow
+    the payload, silently changing what reaches the sinks and index."""
+    clash = sorted(c for c in payload if c.lower() in working)
+    if clash:
+        raise ValueError(
+            f"payload column {clash[0]!r} collides with an internal "
+            f"working column of the ingest epoch ({sorted(working)}); "
+            "rename the source column"
+        )
+
+
 def _epoch_frames(
     batch: DataFrame,
     payload: list[str],
@@ -1850,7 +1864,9 @@ def _epoch_frames(
     (guide §1.2/§2.6: the loop's cost is jobs-per-epoch). Kernel rows
     and values are bit-identical to :func:`_kernel_frame` over the same
     rows (same Arrow UDF, same filter); the batch rows are exactly the
-    source payload (the signature struct is dropped, never written)."""
+    source payload (the signature struct is dropped, never written).
+    A payload column named like the ``_sc`` working column raises."""
+    _reject_working_columns(payload, {"_sc"})
     sig_code = _text_sig_code_udf(n, num_hashes)(F.col(text_col))
     combined = (
         _spread(batch.select(*payload))

@@ -889,9 +889,15 @@ def _lsh_epoch_frames(
     payload columns, the signature and the norm materialize in one job;
     both frames are projections over the pinned blocks. Kernel values
     are bit-identical to :func:`_lsh_kernel_frame` over the same rows
-    (same signature expression/kernel, same norm)."""
+    (same signature expression/kernel, same norm). A payload column
+    named like a working column (``_nrm``, ``sig``, or ``id`` when the
+    id column is named otherwise) raises."""
+    from stream_sentinel_spark.operators.dedup import _reject_working_columns
     from stream_sentinel_spark.operators.partitioning import spread_small
 
+    _reject_working_columns(
+        payload, {"_nrm", "sig"} | ({"id"} if id_col.lower() != "id" else set())
+    )
     carry = [c for c in payload if c != id_col]
     combined = (
         lsh_signatures(
@@ -1210,7 +1216,10 @@ def ivf_topk(
     # one bounded count sizes BOTH the training and the scoring
     # parallelism to the data (see ivf_train — the round-9 x20
     # pathology was one near-empty partition per core through every
-    # Arrow-kernel stage of this pipeline)
+    # Arrow-kernel stage of this pipeline). The count is the job that
+    # materializes the lazy pin, so the corpus plan runs once: training
+    # and scoring read the pinned blocks instead of re-running it.
+    corpus = corpus.select(id_col, vec_col).localCheckpoint(eager=False)
     n_corpus = corpus.count()
     if centroids is None:
         centroids = ivf_train(

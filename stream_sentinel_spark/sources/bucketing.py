@@ -30,7 +30,7 @@ design, same family as `operators/skew.py` and the broadcast hints in
 from __future__ import annotations
 
 import re
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -160,22 +160,38 @@ def compact_bucketed(
 
     Returns the number of data files after compaction (≤ num_buckets)."""
     recover_compaction(spark, table)
+
+    def rewrite(tmp: str) -> None:
+        auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+        old_auto = spark.conf.get(auto_key)
+        spark.conf.set(auto_key, "false")
+        try:
+            write_bucketed(
+                spark.table(table), tmp, bucket_cols, num_buckets,
+                sort_cols=sort_cols, path=path,
+            )
+        finally:
+            spark.conf.set(auto_key, old_auto)
+
+    swap_table(spark, table, rewrite)
+    return len(spark.table(table).inputFiles())
+
+
+def swap_table(
+    spark: SparkSession, table: str, write: Callable[[str], None]
+) -> None:
+    """Replace ``table`` with the table ``write(tmp)`` creates under
+    ``tmp = {table}__compacting``: the replacement is written completely
+    first, then swapped in by DROP + RENAME (an in-place overwrite would
+    read the files it is deleting). A crash between the two leaves a
+    complete tmp table that :func:`recover_compaction` renames in."""
     tmp = f"{table}__compacting"
     spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old_auto = spark.conf.get(auto_key)
-    spark.conf.set(auto_key, "false")
-    try:
-        write_bucketed(
-            spark.table(table), tmp, bucket_cols, num_buckets,
-            sort_cols=sort_cols, path=path,
-        )
-    finally:
-        spark.conf.set(auto_key, old_auto)
-    spark.sql(f"DROP TABLE {table}")
+    write(tmp)
+    if spark.catalog.tableExists(table):
+        spark.sql(f"DROP TABLE {table}")
     spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
     spark.catalog.refreshTable(table)
-    return len(spark.table(table).inputFiles())
 
 
 def table_info(spark: SparkSession, table: str) -> dict[str, str]:

@@ -51,6 +51,8 @@ rank, plus one tiny driver-side marker write per epoch.
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -100,12 +102,8 @@ def _hadoop_fs(spark: SparkSession, path_str: str):
     return fs, hpath
 
 
-def _marker(spark: SparkSession, commit_log_dir: str, epoch_id: int):
-    return _hadoop_fs(spark, f"{commit_log_dir.rstrip('/')}/epoch-{int(epoch_id)}")
-
-
 def is_epoch_committed(spark: SparkSession, commit_log_dir: str, epoch_id: int) -> bool:
-    fs, path = _marker(spark, commit_log_dir, epoch_id)
+    fs, path = _hadoop_fs(spark, f"{commit_log_dir.rstrip('/')}/epoch-{int(epoch_id)}")
     return fs.exists(path)
 
 
@@ -117,52 +115,109 @@ def is_epoch_committed(spark: SparkSession, commit_log_dir: str, epoch_id: int) 
 _MARKER_RETENTION = 1_000
 _PRUNE_EVERY = 64
 
+#: commit-log entry names: ``epoch-{id}`` markers (the alert sink's
+#: plain ones and the index loops' manifests) and the index loops'
+#: auxiliary ``snap-{id}.{k}`` snapshots (k ≥ 1)
+_ENTRY_RE = re.compile(r"^(?:epoch-(-?\d+)|snap-(-?\d+)\.(\d+))$")
 
-def commit_epoch(spark: SparkSession, commit_log_dir: str, epoch_id: int) -> None:
-    """Atomically record the epoch as fully acknowledged: write a temp
-    marker, then rename — rename is the atomicity primitive on HDFS and
-    the local FS (the same one Structured Streaming's own commit log
-    relies on). Old markers are pruned periodically (Structured
-    Streaming's own commit log expires entries the same way); without
-    pruning a 10 s trigger writes ~8.6k files/day forever."""
-    fs, final = _marker(spark, commit_log_dir, epoch_id)
+
+def write_atomic(spark: SparkSession, log_dir: str, name: str, payload) -> None:
+    """Write ``payload`` (JSON) to ``log_dir/name`` as a temp file, then
+    rename — rename is the atomicity primitive on HDFS and the local FS
+    (the same one Structured Streaming's own commit log relies on)."""
+    fs, final = _hadoop_fs(spark, f"{log_dir.rstrip('/')}/{name}")
     fs.mkdirs(final.getParent())
     tmp = final.suffix(".tmp")
     out = fs.create(tmp, True)
     try:
-        out.write(str(int(epoch_id)).encode("utf-8"))
+        out.write(json.dumps(payload).encode("utf-8"))
     finally:
         out.close()
     if not fs.rename(tmp, final):  # pragma: no cover - FS race
-        raise IOError(f"could not commit epoch marker {final}")
-    if int(epoch_id) % _PRUNE_EVERY == 0:
-        prune_markers(spark, commit_log_dir, int(epoch_id) - _MARKER_RETENTION)
+        raise IOError(f"could not commit {final}")
+
+
+def delete_entry(spark: SparkSession, log_dir: str, name: str) -> None:
+    fs, p = _hadoop_fs(spark, f"{log_dir.rstrip('/')}/{name}")
+    fs.delete(p, False)
+
+
+def log_entries(spark: SparkSession, log_dir: str) -> list[tuple[int, int]]:
+    """(epoch, k) keys of every commit-log entry: epoch markers are k=0,
+    auxiliary snapshots k ≥ 1."""
+    fs, d = _hadoop_fs(spark, log_dir)
+    if not fs.exists(d):
+        return []
+    keys = []
+    for st in fs.listStatus(d):
+        m = _ENTRY_RE.match(st.getPath().getName())
+        if m and m.group(1) is not None:
+            keys.append((int(m.group(1)), 0))
+        elif m:
+            keys.append((int(m.group(2)), int(m.group(3))))
+    return keys
+
+
+def entry_name(key: tuple[int, int]) -> str:
+    epoch, k = key
+    return f"epoch-{epoch}" if k == 0 else f"snap-{epoch}.{k}"
+
+
+def commit_epoch(
+    spark: SparkSession, commit_log_dir: str, epoch_id: int, payload=None
+) -> None:
+    """Atomically record the epoch as fully acknowledged: one
+    :func:`write_atomic` of ``epoch-{id}`` (content: the epoch id, or
+    the index loops' manifest ``payload``). Old entries are pruned
+    periodically (Structured Streaming's own commit log expires entries
+    the same way); without pruning a 10 s trigger writes ~8.6k
+    files/day forever."""
+    epoch_id = int(epoch_id)
+    write_atomic(
+        spark, commit_log_dir, f"epoch-{epoch_id}",
+        epoch_id if payload is None else payload,
+    )
+    if epoch_id % _PRUNE_EVERY == 0:
+        prune_markers(spark, commit_log_dir, epoch_id - _MARKER_RETENTION)
 
 
 def prune_markers(
     spark: SparkSession, commit_log_dir: str, older_than_epoch: int
 ) -> int:
-    """Delete epoch markers below ``older_than_epoch``; returns the
-    number removed. Safe at any point: only epochs the streaming engine
-    can never replay again (all < the latest committed) are eligible."""
+    """Delete the entries (markers and snapshots) of epochs in
+    ``[0, older_than_epoch)``; returns the number removed. Safe at any
+    point: only epochs the streaming engine can never replay again (all
+    < the latest committed) are eligible, and the index loops' init
+    snapshot (epoch −1) is kept."""
     if older_than_epoch <= 0:
         return 0
-    fs, dirpath = _hadoop_fs(spark, commit_log_dir)
-    if not fs.exists(dirpath):
-        return 0
     removed = 0
-    for status in fs.listStatus(dirpath):
-        name = status.getPath().getName()
-        if not name.startswith("epoch-"):
-            continue
-        try:
-            epoch = int(name.removeprefix("epoch-"))
-        except ValueError:
-            continue
-        if epoch < older_than_epoch:
-            fs.delete(status.getPath(), False)
+    for key in log_entries(spark, commit_log_dir):
+        if 0 <= key[0] < older_than_epoch:
+            delete_entry(spark, commit_log_dir, entry_name(key))
             removed += 1
     return removed
+
+
+def start_foreach_batch(
+    stream_df: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None],
+    *,
+    checkpoint_location: str,
+    query_name: str,
+    available_now: bool = False,
+) -> StreamingQuery:
+    """Start ``batch_fn`` as an append-mode ``foreachBatch`` query — the
+    one starter the alert sink and both index loops share."""
+    writer = (
+        stream_df.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_location)
+        .outputMode("append")
+        .queryName(query_name)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def make_exactly_once_batch_fn(
@@ -197,17 +252,11 @@ def write_alerts_exactly_once(
     broker or inject a test double."""
     if commit_log_dir is None:
         commit_log_dir = checkpoint_location.rstrip("/") + "/alert-commits"
-    writer = (
-        alerts.writeStream.foreachBatch(
-            make_exactly_once_batch_fn(publish, commit_log_dir)
-        )
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("append")
-        .queryName(query_name)
+    return start_foreach_batch(
+        alerts, make_exactly_once_batch_fn(publish, commit_log_dir),
+        checkpoint_location=checkpoint_location, query_name=query_name,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def kafka_publisher(config: EngineConfig) -> Publisher:

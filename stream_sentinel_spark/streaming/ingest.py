@@ -63,10 +63,10 @@ automatically by :func:`run_dedup_ingest` before the query starts —
 deletes any file no manifest claims, rebuilds the overwrite-maintained
 ``_bandstats`` from the recovered bands when its inventory disagrees,
 and finishes a crash-interrupted compaction from its intent marker. A
-replayed epoch therefore always runs against a byte-clean index: crash
-at ANY point between appends is recovered to ≡ a clean run
-(tests/test_ingest_pipeline.py's crash-injection matrix). This closes
-the round-6 documented gap without a transactional table format, using
+replayed epoch therefore always runs against a byte-clean index: a
+crash after ANY mutation of the epoch is recovered to ≡ a clean run
+(tests/test_ingest_recovery.py enumerates them). This closes the
+round-6 documented gap without a transactional table format, using
 the same rename primitive the exactly-once alert sink trusts
 (reference anchor: the EXACTLY_ONCE checkpoint contract,
 StreamSentinelJob.java:154-165, extended to the index sink).
@@ -79,17 +79,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from stream_sentinel_spark.streaming.exactly_once import start_foreach_batch
 from stream_sentinel_spark.streaming.sources import INGEST_COL
 
 _KINDS = ("minhash", "lsh")
 
-#: per kind: (grown-table suffixes, append-table suffixes, stats keys,
-#: best-score column of the match/intra frames)
+#: per kind: (append-table suffixes, stats keys); the grown tables are
+#: the append tables plus the ``_bandstats`` count log
 _KIND_SPEC = {
-    "minhash": (("_bands", "_verify", "_bandstats"), ("_bands", "_verify"),
-                ["band", "bucket"], "best_jaccard"),
-    "lsh": (("_bands", "_vecs", "_bandstats"), ("_bands", "_vecs"),
-            ["band", "val"], "best_cos"),
+    "minhash": (("_bands", "_verify"), ["band", "bucket"]),
+    "lsh": (("_bands", "_vecs"), ["band", "val"]),
 }
 
 
@@ -141,21 +140,15 @@ def _family(kind: str):
 
 
 def _intra_batch_matches(
-    spark: SparkSession,
-    batch: DataFrame,
-    table: str,
-    kind: str,
-    id_col: str,
-    content_col: str,
-    threshold: float,
-    mode: str = "pairwise",
-    meta=None,
-    kernel: DataFrame | None = None,
+    kind: str, threshold: float, mode: str, meta, kernel: DataFrame
 ) -> DataFrame:
     """(new_id, n_matches, best_*, first_match) over pairs WITHIN the
     batch — the same output contract as the index match, computed by
-    the same operator family with the index's own stored parameters so
-    intra- and cross-batch duplicates are judged identically.
+    the same operator family with the index's own stored parameters
+    (``meta``) so intra- and cross-batch duplicates are judged
+    identically. Candidates and verify inputs derive from the epoch
+    kernel's pinned blocks — the same expressions over the same rows as
+    the one-shot operators, so pair sets and scores are bit-identical.
 
     ``mode="pairwise"``: a row is a dup iff it pairs with ANY smaller-id
     batch row (pairs come a_id < b_id; the b-side is the diverted one).
@@ -165,44 +158,20 @@ def _intra_batch_matches(
     one-doc-per-batch feed's decision on chains (A~B~C, A≁C: sequential
     diverts B but re-accepts C, because diverted B never entered the
     index). Match stats count accepted partners only, mirroring what
-    the index match would have reported mid-feed.
-
-    ``meta`` / ``kernel``: the loop's cached meta row and per-epoch
-    kernel frame — the pair computation then derives candidates and
-    verify inputs from the kernel's pinned blocks instead of re-running
-    the signature pass over the batch. Same expressions over the same
-    rows; pair sets and scores are bit-identical."""
-    if meta is None:
-        meta = spark.table(f"{table}_meta").head()
+    the index match would have reported mid-feed."""
     if kind == "minhash":
         from stream_sentinel_spark.operators.dedup import (
             _adaptive_verify,
             _band_raw_pairs,
-            minhash_verified_pairs,
         )
 
-        if kernel is not None:
-            cands = _band_raw_pairs(
-                kernel.select("id", "sig"), meta.num_hashes, meta.bands
-            ).distinct()
-            pairs = _adaptive_verify(cands, kernel, threshold)
-        else:
-            pairs = minhash_verified_pairs(
-                batch, id_col, content_col,
-                n=meta.n, num_hashes=meta.num_hashes, bands=meta.bands,
-                threshold=threshold,
-            )
+        cands = _band_raw_pairs(
+            kernel.select("id", "sig"), meta.num_hashes, meta.bands
+        ).distinct()
+        pairs = _adaptive_verify(cands, kernel, threshold)
         score_col, best_name, first_long = "jaccard", "best_jaccard", False
     else:
-        from stream_sentinel_spark.operators.similarity import cosine_pairs_lsh
-
-        if kernel is not None:
-            pairs = _cosine_pairs_from_kernel(kernel, threshold, meta)
-        else:
-            pairs = cosine_pairs_lsh(
-                batch, id_col, content_col, threshold=threshold,
-                bits=meta.bits, bands=meta.bands, dim=meta.dim, seed=meta.seed,
-            )
+        pairs = _cosine_pairs_from_kernel(kernel, threshold, meta)
         score_col, best_name, first_long = "cos", "best_cos", True
     if mode == "transitive":
         return _greedy_component_matches(
@@ -311,57 +280,42 @@ def _greedy_component_matches(
         ]
     )
 
+    def greedy_rows(edges) -> list[tuple]:
+        # ids ascending, divert a row iff it pairs with an already
+        # ACCEPTED smaller id; one row per diverted id
+        smaller: dict = {}  # id -> [(smaller partner, score)]
+        nodes: set = set()
+        for a, b, s in edges:
+            nodes.update((a, b))
+            smaller.setdefault(b, []).append((a, s))
+        accepted: set = set()
+        rows = []
+        for i in sorted(nodes):
+            hits = [(a, s) for a, s in smaller.get(i, ()) if a in accepted]
+            if hits:
+                rows.append((
+                    i, len(hits), float(max(s for _, s in hits)),
+                    min(a for a, _ in hits),
+                ))
+            else:
+                accepted.add(i)
+        return rows
+
     head = pairs.limit(_DRIVER_CC_MAX_PAIRS + 1).collect()
     if len(head) <= _DRIVER_CC_MAX_PAIRS and not any(
         r["a_id"] is None or r["b_id"] is None for r in head
     ):
-        smaller: dict = {}
-        nodes: set = set()
-        for r in head:
-            a, b = r["a_id"], r["b_id"]
-            nodes.add(a)
-            nodes.add(b)
-            smaller.setdefault(b, []).append((a, r["_score"]))
-        accepted: set = set()
-        out_rows = []
-        for i in sorted(nodes):
-            hits = [(a, s) for a, s in smaller.get(i, ()) if a in accepted]
-            if hits:
-                out_rows.append(
-                    (
-                        i,
-                        len(hits),
-                        float(max(s for _, s in hits)),
-                        min(a for a, _ in hits),
-                    )
-                )
-            else:
-                accepted.add(i)
-        return pairs.sparkSession.createDataFrame(out_rows, out_schema)
+        return pairs.sparkSession.createDataFrame(
+            greedy_rows((r["a_id"], r["b_id"], r["_score"]) for r in head),
+            out_schema,
+        )
 
     def greedy(pdf):
         import pandas as pd
 
-        smaller = {}  # id -> [(smaller partner, score)]
-        for a, b, s in zip(pdf["a_id"], pdf["b_id"], pdf["_score"]):
-            smaller.setdefault(b, []).append((a, s))
-        accepted: set = set()
-        rows = []
-        for i in sorted(set(pdf["a_id"]) | set(pdf["b_id"])):
-            hits = [(a, s) for a, s in smaller.get(i, ()) if a in accepted]
-            if hits:
-                rows.append(
-                    (
-                        i,
-                        len(hits),
-                        max(s for _, s in hits),
-                        min(a for a, _ in hits),
-                    )
-                )
-            else:
-                accepted.add(i)
         return pd.DataFrame(
-            rows, columns=["new_id", "n_matches", best_name, "first_match"]
+            greedy_rows(zip(pdf["a_id"], pdf["b_id"], pdf["_score"])),
+            columns=["new_id", "n_matches", best_name, "first_match"],
         )
 
     # require_convergence: a split chain would let a boundary doc be
@@ -438,8 +392,10 @@ def make_dedup_ingest_batch_fn(
     and the atomic-append manifest protocol (module doc). Run
     :func:`recover_dedup_ingest` at loop start (automatic via
     :func:`run_dedup_ingest`) to restore a crashed run's state."""
+    from stream_sentinel_spark.streaming.manifest import EpochProtocol
+
     match_fn, append_fn, compact_fn, prepare_epoch = _family(kind)
-    grown, _append_tables, _stats_keys, _best = _KIND_SPEC[kind]
+    grown = (*_KIND_SPEC[kind][0], "_bandstats")
     if dedup_within_batch not in (False, True, "pairwise", "transitive"):
         raise ValueError(
             f"dedup_within_batch={dedup_within_batch!r} — expected False, "
@@ -448,7 +404,15 @@ def make_dedup_ingest_batch_fn(
     intra_mode = (
         "transitive" if dedup_within_batch == "transitive" else "pairwise"
     )
-    n_appends = [0]
+    protocol = EpochProtocol(
+        commit_log_dir,
+        tables=[table + s for s in grown],
+        paths=(accepted_path, matches_path),
+        compact_every=compact_every,
+        maintain=lambda spark: compact_fn(spark, table),
+        refresh_session=refresh_session,
+        job_prefix="ingest",
+    )
     # the meta row is immutable for the life of an index (appends and
     # compaction preserve it) — read it once per loop, not once per
     # stage per epoch (three catalog reads + head() jobs per batch)
@@ -462,44 +426,30 @@ def make_dedup_ingest_batch_fn(
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
 
-        def _label(stage: str) -> None:
-            # per-stage job labels (guide §1.5) — the loop's many small
-            # jobs are otherwise indistinguishable in the UI/REST timeline
-            spark.sparkContext.setJobDescription(
-                f"ingest e{epoch_id}: {stage}"
+        def work(label) -> bool:
+            # the ingestion stamp is transport plumbing, not document
+            # payload — it must reach neither the index nor the sinks
+            payload = [c for c in batch_df.columns if c != INGEST_COL]
+            # ONE eager checkpoint per epoch (payload + signatures +
+            # verify inputs in a single job — round 9 paid two: a batch
+            # materialization, then a kernel pass over it); every stage
+            # below consumes projections/slices of the pinned blocks, so
+            # no consumer re-reads the source files and the append's
+            # lineage never reaches into the index tables it is writing
+            label("epoch checkpoint")
+            meta = _meta(spark)
+            batch, kernel = prepare_epoch(
+                batch_df, payload, id_col, content_col, meta
             )
-
-        if commit_log_dir is not None:
-            from stream_sentinel_spark.streaming.exactly_once import (
-                is_epoch_committed,
-            )
-
-            if is_epoch_committed(spark, commit_log_dir, epoch_id):
-                return
-        # the ingestion stamp is transport plumbing, not document
-        # payload — it must reach neither the index nor the sinks
-        payload = [c for c in batch_df.columns if c != INGEST_COL]
-        # ONE eager checkpoint per epoch (payload + signatures + verify
-        # inputs in a single job — round 9 paid two: a batch
-        # materialization, then a kernel pass over it); every stage
-        # below consumes projections/slices of the pinned blocks, so no
-        # consumer re-reads the source files and the append's lineage
-        # never reaches into the index tables it is writing
-        _label("epoch checkpoint")
-        meta = _meta(spark)
-        batch, kernel = prepare_epoch(
-            batch_df, payload, id_col, content_col, meta
-        )
-        appended = False
-        if batch.take(1):
+            if not batch.take(1):
+                return False
             survivors = batch
             surv_kernel = kernel
             intra = None
             if dedup_within_batch:
-                _label("intra-batch dedup")
+                label("intra-batch dedup")
                 intra = _intra_batch_matches(
-                    spark, batch, table, kind, id_col, content_col, threshold,
-                    mode=intra_mode, meta=meta, kernel=kernel,
+                    kind, threshold, intra_mode, meta, kernel
                 ).localCheckpoint(eager=True)
                 # lazy anti-joins of checkpointed frames: each consumer
                 # re-derives a broadcast anti-join over pinned blocks —
@@ -512,7 +462,7 @@ def make_dedup_ingest_batch_fn(
                     intra.select(F.col("new_id").alias("id")), ["id"],
                     "left_anti",
                 )
-            _label("index match")
+            label("index match")
             matches = match_fn(
                 spark, survivors, table, id_col, content_col,
                 threshold=threshold, cutoff=cutoff,
@@ -538,7 +488,7 @@ def make_dedup_ingest_batch_fn(
             # to async listener delivery — a blocking get with no
             # timeout is the wrong failure mode for a production
             # stream.)
-            _label("accepted")
+            label("accepted")
             accepted = survivors.join(
                 matches.select(F.col("new_id").alias(id_col)), [id_col],
                 "left_anti",
@@ -547,70 +497,25 @@ def make_dedup_ingest_batch_fn(
                 accepted.withColumn("epoch", F.lit(epoch_id)).write.mode(
                     "append"
                 ).parquet(accepted_path)
-            has_accepted = bool(accepted.take(1))
-            if has_accepted:
-                # the accepted slice of the epoch kernel feeds all three
-                # index writes — each re-derives this anti-join over the
-                # pinned kernel/matches blocks (no signature recompute;
-                # the kernel rows of sig-less docs are absent by
-                # construction, exactly as the per-stage recomputation
-                # filtered them)
-                _label("index append")
-                acc_kernel = surv_kernel.join(
-                    matches.select(F.col("new_id").alias("id")), ["id"],
-                    "left_anti",
-                )
-                append_fn(
-                    accepted, table, id_col, content_col,
-                    meta=meta, kernel=acc_kernel,
-                )
-                n_appends[0] += 1
-                appended = True
-                if refresh_session is not None:
-                    for suffix in grown:
-                        refresh_session.catalog.refreshTable(table + suffix)
-        if commit_log_dir is not None:
-            from stream_sentinel_spark.streaming.manifest import (
-                commit_epoch_manifest,
-                snapshot_state,
+            if not accepted.take(1):
+                return False
+            # the accepted slice of the epoch kernel feeds all three
+            # index writes — each re-derives this anti-join over the
+            # pinned kernel/matches blocks (no signature recompute; the
+            # kernel rows of sig-less docs are absent by construction,
+            # exactly as the per-stage recomputation filtered them)
+            label("index append")
+            acc_kernel = surv_kernel.join(
+                matches.select(F.col("new_id").alias("id")), ["id"],
+                "left_anti",
             )
-
-            _label("manifest commit")
-            tables = [table + s for s in grown]
-            paths = [p for p in (accepted_path, matches_path) if p is not None]
-            commit_epoch_manifest(
-                spark, commit_log_dir, epoch_id,
-                snapshot_state(spark, epoch_id, tables, paths),
+            append_fn(
+                accepted, table, id_col, content_col,
+                meta=meta, kernel=acc_kernel,
             )
-        # maintenance AFTER the commit: the epoch's content is already
-        # durable and replay-guarded, so a crash anywhere inside the
-        # compaction can never double-append — recovery only has to
-        # finish (or re-snapshot after) a content-preserving swap
-        if compact_every and appended and n_appends[0] % compact_every == 0:
-            _label("compaction")
-            if commit_log_dir is not None:
-                from stream_sentinel_spark.streaming import manifest as mf
+            return True
 
-                tables = [table + s for s in grown]
-                paths = [
-                    p for p in (accepted_path, matches_path) if p is not None
-                ]
-                mf.write_compact_pending(
-                    spark, commit_log_dir, epoch_id,
-                    [table + s for s in _append_tables],
-                )
-                compact_fn(spark, table)
-                mf.write_aux_snapshot(
-                    spark, commit_log_dir, epoch_id,
-                    mf.snapshot_state(spark, epoch_id, tables, paths),
-                )
-                mf.clear_compact_pending(spark, commit_log_dir)
-            else:
-                compact_fn(spark, table)
-            if refresh_session is not None:
-                for suffix in grown:
-                    refresh_session.catalog.refreshTable(table + suffix)
-        spark.sparkContext.setJobDescription(None)
+        protocol(spark, epoch_id, work)
 
     return run
 
@@ -633,7 +538,7 @@ def recover_dedup_ingest(
     automatically. Returns the recovery action report."""
     from stream_sentinel_spark.streaming.manifest import recover_ingest_state
 
-    grown, append_suffixes, stats_keys, _best = _KIND_SPEC[kind]
+    append_suffixes, stats_keys = _KIND_SPEC[kind]
     stats_table = f"{table}_bandstats"
 
     def rebuild_stats() -> None:
@@ -691,14 +596,8 @@ def run_dedup_ingest(
             accepted_path=batch_kwargs.get("accepted_path"),
             matches_path=batch_kwargs.get("matches_path"),
         )
-    writer = (
-        stream_df.writeStream.foreachBatch(
-            make_dedup_ingest_batch_fn(**batch_kwargs)
-        )
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("append")
-        .queryName(query_name)
+    return start_foreach_batch(
+        stream_df, make_dedup_ingest_batch_fn(**batch_kwargs),
+        checkpoint_location=checkpoint_location, query_name=query_name,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,89 +1,78 @@
-"""Epoch-manifest commit protocol — atomic multi-table index appends.
+"""Epoch-manifest commit protocol — atomic multi-table appends for the
+dedup ingest loop (index tables ``_bands`` / ``_verify``-or-``_vecs`` /
+``_bandstats`` plus the accepted and match sinks) and the upsert loop
+(its ``_log`` table).
 
-The ingest loop (:mod:`stream_sentinel_spark.streaming.ingest`) grows a
-persisted MinHash/LSH index by appending to THREE tables per epoch
-(``_bands`` / ``_verify``-or-``_vecs`` / ``_bandstats``) plus up to two
-parquet sinks (accepted rows, match reports). Parquet has no cross-table
-transaction, so a crash mid-epoch used to leave partial rows behind —
-the one correctness-under-failure hole the round-6 record documented
-honestly (``ingest.py``) rather than hid. This module closes it without
-a transactional table format, with the same primitive the engine's
-exactly-once alert sink already trusts (``exactly_once.commit_epoch``:
-write-temp + atomic rename — the primitive Structured Streaming's own
-commit log is built on; reference anchor: the EXACTLY_ONCE checkpoint
-contract, flink-job StreamSentinelJob.java:154-165, extended here from
-the alert sink to the index sink):
+Parquet has no cross-table transaction, so a crash mid-epoch would
+leave partial rows behind. This module closes that without a
+transactional table format, with the primitive the exactly-once alert
+sink already trusts (``exactly_once.commit_epoch``: write-temp + atomic
+rename, the one Structured Streaming's own commit log is built on;
+reference anchor: the EXACTLY_ONCE checkpoint contract, flink-job
+StreamSentinelJob.java:154-165, extended from the alert sink to the
+index and log sinks):
 
-1. **Commit = snapshot.** After an epoch's appends succeed, the epoch
-   marker ``epoch-{id}`` is written with a JSON payload listing, per
-   table and per sink path, exactly the data files that are supposed to
-   exist. One atomic rename makes the epoch committed AND records the
-   expected file inventory — there is no window where one exists
-   without the other (a separate marker + manifest pair would reopen
-   the replay/double-append race between the two writes).
+1. **Commit = snapshot.** After an epoch's writes succeed, ``epoch-{id}``
+   is written with a JSON payload listing, per table and sink path,
+   exactly the data files that should exist. One rename makes the epoch
+   committed AND records its inventory — a separate marker + manifest
+   pair would reopen the replay/double-append race between two writes.
 2. **Recovery = delete what no manifest claims.** At loop start,
-   :func:`recover_ingest_state` lists each location and deletes any
-   data file absent from the latest snapshot — appends only ever ADD
-   files with collision-free UUID names, so an unclaimed file is
-   precisely an uncommitted epoch's leftover. Structured Streaming then
-   replays that epoch from its offset checkpoint against a byte-clean
-   index.
-3. **Stats tables rebuild, not prune.** ``_bandstats`` is an append
-   LOG of count deltas (round 10; summed per key at read), but its
-   COMPACTION and the recovery rebuild still overwrite in place
-   (``insertInto(overwrite=True)``) — a crash inside THAT commit can
-   lose old files rather than leave extras, and deletion can't recover
-   that. The stats table is derivable state (an Exchange-free groupBy
-   of the recovered bucketed ``_bands``), so recovery rebuilds it —
-   collapsing the log to one aggregated row set — whenever its on-disk
-   inventory differs from the snapshot in either direction.
-4. **Compaction gets a WAL.** ``compact_*_index`` swaps entire tables
-   (new files everywhere), which snapshot-diffing would misread as one
-   giant orphan set. The loop therefore writes a ``compact-pending``
-   intent marker (old locations recorded) before compacting and a
-   fresh ``snap-*`` snapshot after; recovery finishes a half-done swap
-   (re-issuing the rename ``compact_bucketed`` documents), deletes a
-   completed-but-uncleaned old external location, and re-snapshots —
-   compaction only ever runs AFTER the epoch's commit marker, so the
-   replay guard already holds and content is correct in every crash
-   state (the swap is content-preserving and only renames a COMPLETE
-   table in).
+   :func:`recover_ingest_state` deletes every data file absent from the
+   latest snapshot — appends only ADD files with collision-free UUID
+   names, so an unclaimed file is an uncommitted epoch's leftover.
+   Structured Streaming then replays that epoch against clean storage.
+3. **Derivable stats are rebuilt, never trusted after a crash.** The
+   ``_bandstats`` count log is overwritten in place by compaction and
+   by the rebuild itself; a crash inside that write loses files rather
+   than leaving extras, which deletion can't undo. The table is an
+   Exchange-free groupBy of the recovered ``_bands``, so recovery
+   rebuilds it on any inventory mismatch and, on the
+   ``compact-pending`` branch, always.
+4. **One protocol for both loops.** :class:`EpochProtocol` runs: replay
+   guard → the loop's work → ``epoch-{id}`` commit → every Nth append,
+   the ``compact-pending`` marker (old table locations) → the loop's
+   maintenance → a ``snap-{id}.{k}`` snapshot → marker cleared.
+   Maintenance swaps whole tables, which snapshot-diffing would misread
+   as one giant orphan set; the marker routes recovery instead to
+   finishing the swap (``recover_compaction``), deleting an abandoned
+   old external location, rebuilding the stats and re-snapshotting.
+   It only runs after the commit, so the replay guard already holds
+   and content is correct in every crash state. Without a commit log
+   the same sequence runs with every log step a no-op.
+   tests/test_ingest_recovery.py crashes after each of its mutations.
 
-Scale shape: the per-epoch cost is one directory listing per grown
-location (the same listing every match's FileScan already performs) and
-one small JSON rename — O(index file count), reset by the same
-compaction that resets the match cost; no data is read or moved. At
-100 TB the listings are object-store LIST calls, the renames are the
-same atomic-visibility primitive Structured Streaming's checkpoint
-requires of the filesystem.
+Scale shape: per epoch, one directory listing per grown location (the
+listing every match's FileScan already performs) and one small JSON
+rename — O(index file count), reset by the same compaction that resets
+the match cost; no data is read or moved.
 
-Manifest ordering: ``epoch-{id}`` sorts by ``(id, 0)``; auxiliary
-snapshots ``snap-{id}.{k}`` (post-compaction / post-recovery, k ≥ 1)
-sort by ``(id, k)``; the init snapshot written before the first epoch is
-``epoch--1`` (id −1 — ``foreachBatch`` epochs are ≥ 0). The latest
-snapshot is the max key. Old entries are pruned on the same cadence and
-retention as the alert commit log.
+Ordering: ``epoch-{id}`` sorts by ``(id, 0)``, ``snap-{id}.{k}``
+(k ≥ 1) by ``(id, k)``; the init snapshot written before the first
+epoch is ``epoch--1``. The latest snapshot is the max key. Entries are
+written and pruned by the alert commit log's own writer and pruner.
 """
 
 from __future__ import annotations
 
 import json
-import re
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import SparkSession
 
 from stream_sentinel_spark.streaming.exactly_once import (
-    _MARKER_RETENTION,
-    _PRUNE_EVERY,
     _hadoop_fs,
+    commit_epoch,
+    delete_entry,
+    entry_name,
+    is_epoch_committed,
+    log_entries,
+    write_atomic,
 )
 
 #: epoch id of the init snapshot written before the first real epoch
 INIT_EPOCH = -1
 
-_SNAP_RE = re.compile(r"^snap-(-?\d+)\.(\d+)$")
-_EPOCH_RE = re.compile(r"^epoch-(-?\d+)$")
 _PENDING = "compact-pending"
 
 
@@ -140,30 +129,25 @@ def _delete_staging(spark: SparkSession, location: str) -> int:
     return removed
 
 
-def delete_location(spark: SparkSession, location: str) -> None:
-    """Recursively remove a storage directory — used to clean the OLD
-    external location after a compaction swap relocates the table."""
-    fs, p = _hadoop_fs(spark, location)
-    if fs.exists(p):
-        fs.delete(p, True)
-
-
 def snapshot_state(
     spark: SparkSession,
     epoch_id: int,
     tables: Sequence[str],
     paths: Sequence[str],
 ) -> dict:
-    """The manifest payload: per table (location + data-file names) and
-    per sink path (data-file names), as of now."""
+    """The manifest payload: per existing table (location + data-file
+    names) and per sink path (data-file names), as of now. A table not
+    created yet (the upsert log before its first append) is absent."""
+    locations = {
+        t: table_location(spark, t)
+        for t in tables
+        if spark.catalog.tableExists(t)
+    }
     return {
         "epoch": int(epoch_id),
         "tables": {
-            t: {
-                "location": table_location(spark, t),
-                "files": sorted(list_data_files(spark, table_location(spark, t))),
-            }
-            for t in tables
+            t: {"location": loc, "files": sorted(list_data_files(spark, loc))}
+            for t, loc in locations.items()
         },
         "paths": {
             p: {"files": sorted(list_data_files(spark, p))} for p in paths
@@ -174,19 +158,6 @@ def snapshot_state(
 # ---------------------------------------------------------------------------
 # the commit log
 # ---------------------------------------------------------------------------
-
-
-def _write_atomic(spark: SparkSession, log_dir: str, name: str, payload: dict) -> None:
-    fs, final = _hadoop_fs(spark, f"{log_dir.rstrip('/')}/{name}")
-    fs.mkdirs(final.getParent())
-    tmp = final.suffix(".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(json.dumps(payload).encode("utf-8"))
-    finally:
-        out.close()
-    if not fs.rename(tmp, final):  # pragma: no cover - FS race
-        raise IOError(f"could not commit manifest {final}")
 
 
 def _read_json(spark: SparkSession, log_dir: str, name: str) -> dict | None:
@@ -205,118 +176,146 @@ def _read_json(spark: SparkSession, log_dir: str, name: str) -> dict | None:
     return parsed if isinstance(parsed, dict) else None
 
 
-def _delete_entry(spark: SparkSession, log_dir: str, name: str) -> None:
-    fs, p = _hadoop_fs(spark, f"{log_dir.rstrip('/')}/{name}")
-    fs.delete(p, False)
-
-
-def commit_epoch_manifest(
-    spark: SparkSession, log_dir: str, epoch_id: int, payload: dict
+def write_snapshot(
+    spark: SparkSession,
+    log_dir: str,
+    epoch_id: int,
+    tables: Sequence[str],
+    paths: Sequence[str],
+    commit: bool = False,
 ) -> None:
-    """ONE atomic rename = epoch committed + file inventory recorded.
-    The file is the same ``epoch-{id}`` name
+    """Record the current inventory. ``commit=True``: as the epoch's own
+    ``epoch-{id}`` entry — ONE rename commits the epoch (the name
     :func:`~stream_sentinel_spark.streaming.exactly_once.is_epoch_committed`
-    checks, so the replay guard needs no second lookup. Prunes old
-    entries on the alert-commit-log cadence."""
-    _write_atomic(spark, log_dir, f"epoch-{int(epoch_id)}", payload)
-    if int(epoch_id) % _PRUNE_EVERY == 0:
-        prune_manifests(spark, log_dir, int(epoch_id) - _MARKER_RETENTION)
-
-
-def write_aux_snapshot(
-    spark: SparkSession, log_dir: str, epoch_id: int, payload: dict
-) -> str:
-    """A post-compaction / post-recovery snapshot ordered AFTER the
-    epoch's own manifest: ``snap-{epoch}.{k}`` with the next free k."""
-    ks = [
-        k
-        for (e, k) in _entries(spark, log_dir)
-        if e == int(epoch_id) and k >= 1
-    ]
-    name = f"snap-{int(epoch_id)}.{(max(ks) + 1) if ks else 1}"
-    _write_atomic(spark, log_dir, name, payload)
-    return name
-
-
-def _entries(spark: SparkSession, log_dir: str) -> list[tuple[int, int]]:
-    """(epoch, k) keys of every manifest in the log; epoch markers are
-    k=0, aux snapshots k≥1."""
-    fs, d = _hadoop_fs(spark, log_dir)
-    if not fs.exists(d):
-        return []
-    keys = []
-    for st in fs.listStatus(d):
-        name = st.getPath().getName()
-        m = _EPOCH_RE.match(name)
-        if m:
-            keys.append((int(m.group(1)), 0))
-            continue
-        m = _SNAP_RE.match(name)
-        if m:
-            keys.append((int(m.group(1)), int(m.group(2))))
-    return keys
-
-
-def _entry_name(key: tuple[int, int]) -> str:
-    epoch, k = key
-    return f"epoch-{epoch}" if k == 0 else f"snap-{epoch}.{k}"
+    checks) and records its files. Otherwise as the next
+    ``snap-{id}.{k}``, ordered after the epoch's manifest (post-
+    compaction / post-recovery snapshots)."""
+    snap = snapshot_state(spark, epoch_id, tables, paths)
+    if commit:
+        commit_epoch(spark, log_dir, epoch_id, snap)
+        return
+    ks = [k for (e, k) in log_entries(spark, log_dir) if e == int(epoch_id)]
+    write_atomic(
+        spark, log_dir, entry_name((int(epoch_id), max(ks, default=0) + 1)), snap
+    )
 
 
 def latest_manifest(spark: SparkSession, log_dir: str) -> dict | None:
     """The most recent snapshot payload ((epoch, k)-max), skipping any
     entry whose content isn't a manifest (e.g. a plain alert-sink epoch
     marker sharing the directory)."""
-    for key in sorted(_entries(spark, log_dir), reverse=True):
-        payload = _read_json(spark, log_dir, _entry_name(key))
+    for key in sorted(log_entries(spark, log_dir), reverse=True):
+        payload = _read_json(spark, log_dir, entry_name(key))
         if payload is not None and "tables" in payload:
             return payload
     return None
 
 
-def prune_manifests(
-    spark: SparkSession, log_dir: str, older_than_epoch: int
-) -> int:
-    """Expire manifests the streaming engine can never consult again
-    (strictly older than the retention horizon); the latest is always
-    retained by construction (horizon trails the newest commit)."""
-    if older_than_epoch <= INIT_EPOCH:
-        return 0
-    removed = 0
-    for key in _entries(spark, log_dir):
-        if key[0] < older_than_epoch and key != (INIT_EPOCH, 0):
-            _delete_entry(spark, log_dir, _entry_name(key))
-            removed += 1
-    return removed
-
-
-# ---------------------------------------------------------------------------
-# compaction WAL
-# ---------------------------------------------------------------------------
-
-
 def write_compact_pending(
     spark: SparkSession, log_dir: str, epoch_id: int, tables: Sequence[str]
 ) -> None:
-    """Intent marker written BEFORE an in-loop compaction: records each
-    table's pre-compaction location so recovery can (a) finish the swap
-    and (b) delete a relocated table's abandoned old directory."""
-    _write_atomic(
-        spark,
-        log_dir,
-        _PENDING,
-        {
-            "epoch": int(epoch_id),
-            "tables": {t: {"location": table_location(spark, t)} for t in tables},
-        },
+    """Intent marker written BEFORE maintenance: its pre-compaction
+    table locations let recovery (a) finish the swap and (b) delete a
+    relocated table's abandoned old directory."""
+    write_atomic(
+        spark, log_dir, _PENDING, snapshot_state(spark, epoch_id, tables, ())
     )
 
 
-def read_compact_pending(spark: SparkSession, log_dir: str) -> dict | None:
-    return _read_json(spark, log_dir, _PENDING)
+# ---------------------------------------------------------------------------
+# the epoch protocol
+# ---------------------------------------------------------------------------
 
 
-def clear_compact_pending(spark: SparkSession, log_dir: str) -> None:
-    _delete_entry(spark, log_dir, _PENDING)
+class EpochProtocol:
+    """The epoch sequence (module doc, rule 4), written once for both
+    loops. Call it as ``protocol(spark, epoch_id, work)``: ``work(label)``
+    runs the epoch's writes and returns whether it appended.
+
+    ``tables`` / ``paths``: what every snapshot inventories.
+    ``maintain(spark)``: the compaction body, run after every
+    ``compact_every``-th append (an in-process count — a restart moves
+    maintenance, never content). ``refresh_session``: a session whose
+    cached relations of ``tables`` are invalidated after each append
+    and maintenance. ``job_prefix``: job labels ``"{prefix} e{id}:
+    {stage}"`` for the protocol's steps and the ``label`` handed to
+    ``work``."""
+
+    def __init__(
+        self,
+        log_dir: str | None,
+        *,
+        tables: Sequence[str],
+        paths: Sequence[str | None] = (),
+        compact_every: int | None,
+        maintain: Callable[[SparkSession], object],
+        refresh_session: SparkSession | None = None,
+        job_prefix: str | None = None,
+    ) -> None:
+        self.log_dir = log_dir
+        self.tables = list(tables)
+        self.paths = [p for p in paths if p is not None]
+        self.compact_every = compact_every
+        self.maintain = maintain
+        self.refresh_session = refresh_session
+        self.job_prefix = job_prefix
+        self.n_appends = 0
+
+    def _log(self, step: Callable, spark: SparkSession, *args, **kw) -> None:
+        if self.log_dir is not None:
+            step(spark, self.log_dir, *args, **kw)
+
+    def _refresh(self) -> None:
+        if self.refresh_session is not None:
+            for t in self.tables:
+                self.refresh_session.catalog.refreshTable(t)
+
+    def __call__(
+        self,
+        spark: SparkSession,
+        epoch_id: int,
+        work: Callable[[Callable[[str], None]], bool],
+    ) -> None:
+        def label(stage: str) -> None:
+            # per-stage job labels — the loop's many small jobs are
+            # otherwise indistinguishable in the UI / event log
+            if self.job_prefix is not None:
+                spark.sparkContext.setJobDescription(
+                    f"{self.job_prefix} e{epoch_id}: {stage}"
+                )
+
+        if self.log_dir is not None and is_epoch_committed(
+            spark, self.log_dir, epoch_id
+        ):
+            return
+        try:
+            appended = bool(work(label))
+            if appended:
+                self.n_appends += 1
+                self._refresh()
+            label("manifest commit")
+            self._log(
+                write_snapshot, spark, epoch_id, self.tables, self.paths,
+                commit=True,
+            )
+            # maintenance AFTER the commit: the epoch's content is
+            # already durable and replay-guarded, so a crash anywhere
+            # inside it can never double-append
+            if not (
+                appended
+                and self.compact_every
+                and self.n_appends % self.compact_every == 0
+            ):
+                return
+            label("compaction")
+            self._log(write_compact_pending, spark, epoch_id, self.tables)
+            self.maintain(spark)
+            self._log(write_snapshot, spark, epoch_id, self.tables, self.paths)
+            self._log(delete_entry, spark, _PENDING)
+            self._refresh()
+        finally:
+            if self.job_prefix is not None:
+                spark.sparkContext.setJobDescription(None)
 
 
 # ---------------------------------------------------------------------------
@@ -334,8 +333,8 @@ def recover_ingest_state(
     paths: Sequence[str] = (),
     refresh_session: SparkSession | None = None,
 ) -> dict:
-    """Run at ingest-loop start (and after any crash): restore every
-    grown location to exactly the latest committed snapshot, then let
+    """Run at loop start (and after any crash): restore every grown
+    location to exactly the latest committed snapshot, then let
     Structured Streaming's offset checkpoint replay the crashed epoch
     against the clean state.
 
@@ -343,15 +342,16 @@ def recover_ingest_state(
     (present on disk, absent from the snapshot) are deleted; a MISSING
     expected file is unrecoverable data loss and raises.
     ``stats_table``/``rebuild_stats``: the in-place-overwrite stats
-    table — any inventory mismatch triggers ``rebuild_stats()`` (an
-    Exchange-free re-aggregation of the recovered bands table).
+    table — ``rebuild_stats()`` (an Exchange-free re-aggregation of the
+    recovered bands table) runs on any inventory mismatch, and always
+    after an interrupted compaction.
     ``paths``: plain parquet sink dirs (accepted/matches) — orphan
     deletion only, same rule as the append tables.
 
-    Crash-interrupted compactions are finished first (see module doc);
-    that path re-snapshots and returns without orphan-diffing, because
-    compaction only runs after the epoch's commit — the table content
-    is already exactly the committed content, in new files.
+    Crash-interrupted compactions are finished first (module doc, rule
+    4); that path re-snapshots and returns without orphan-diffing,
+    because compaction only runs after the epoch's commit — the table
+    content is already exactly the committed content, in new files.
 
     If NO manifest exists yet, writes the ``epoch--1`` init snapshot of
     the current (clean, just-built) state so the very first epoch's
@@ -364,9 +364,12 @@ def recover_ingest_state(
                     "staging_cleaned": 0}
     all_tables = list(append_tables) + ([stats_table] if stats_table else [])
 
-    pending = read_compact_pending(spark, log_dir)
+    pending = _read_json(spark, log_dir, _PENDING)
     if pending is not None:
-        from stream_sentinel_spark.sources.bucketing import recover_compaction
+        from stream_sentinel_spark.sources.bucketing import (
+            _delete_dir,
+            recover_compaction,
+        )
 
         for t, info in pending.get("tables", {}).items():
             recover_compaction(spark, t)
@@ -375,20 +378,24 @@ def recover_ingest_state(
             if old_loc and now_loc and old_loc != now_loc:
                 # swap completed into a NEW (external) location before the
                 # crash; the abandoned old directory is pure leak
-                delete_location(spark, old_loc)
+                _delete_dir(spark, old_loc)
             _refresh(spark, refresh_session, t)
-        snap = snapshot_state(
-            spark, int(pending.get("epoch", INIT_EPOCH)), all_tables, paths
+        if rebuild_stats is not None:
+            # the compaction rewrites the stats table in place; a crash
+            # inside that write leaves torn counts no inventory can see
+            rebuild_stats()
+            report["stats_rebuilt"] = True
+        write_snapshot(
+            spark, log_dir, int(pending.get("epoch", INIT_EPOCH)), all_tables,
+            paths,
         )
-        write_aux_snapshot(spark, log_dir, snap["epoch"], snap)
-        clear_compact_pending(spark, log_dir)
+        delete_entry(spark, log_dir, _PENDING)
         report["compaction_recovered"] = True
         return report
 
     manifest = latest_manifest(spark, log_dir)
     if manifest is None:
-        snap = snapshot_state(spark, INIT_EPOCH, all_tables, paths)
-        _write_atomic(spark, log_dir, f"epoch-{INIT_EPOCH}", snap)
+        write_snapshot(spark, log_dir, INIT_EPOCH, all_tables, paths, commit=True)
         report["init_snapshot"] = True
         return report
 
@@ -447,6 +454,12 @@ def recover_ingest_state(
             report["orphans_deleted"][p] = len(orphans)
         report["staging_cleaned"] += _delete_staging(spark, p)
 
+    if report["stats_rebuilt"]:
+        # the rebuild rewrote the stats files: record the recovered
+        # inventory, or every later recovery would rebuild again
+        write_snapshot(
+            spark, log_dir, int(manifest["epoch"]), all_tables, paths
+        )
     return report
 
 

@@ -56,10 +56,14 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from stream_sentinel_spark.streaming.exactly_once import (
+    log_entries,
+    start_foreach_batch,
+)
 from stream_sentinel_spark.streaming.sources import INGEST_COL
 
 
@@ -129,16 +133,19 @@ def read_upsert_history(
 
 
 def _committed_log_df(
-    spark: SparkSession, table: str, commit_log_dir: str
+    spark: SparkSession, table: str, commit_log_dir: str | None
 ) -> DataFrame:
     """The log restricted to the data files the latest COMMITTED
     manifest claims — the read surface under which an uncommitted
     (crashed) epoch's files cannot exist. Files are read under the
     CURRENT table schema (pre-evolution files surface widened columns
-    as NULL). Shared by the change feed and the aggregate-delta read."""
+    as NULL). Without a commit log, the whole log table. Shared by the
+    change feed and the aggregate-delta read."""
     from stream_sentinel_spark.streaming.manifest import latest_manifest
 
     log = _log_table(table)
+    if commit_log_dir is None:
+        return spark.table(log)
     manifest = latest_manifest(spark, commit_log_dir)
     entry = (manifest or {}).get("tables", {}).get(log)
     if entry is None:
@@ -223,11 +230,7 @@ def upsert_agg_delta(
     """
     from stream_sentinel_spark.operators.cdc import merge_latest
 
-    log_df = (
-        _committed_log_df(spark, table, commit_log_dir)
-        if commit_log_dir is not None
-        else spark.table(_log_table(table))
-    )
+    log_df = _committed_log_df(spark, table, commit_log_dir)
     if until_epoch is not None:
         log_df = log_df.filter(F.col("_epoch") <= int(until_epoch))
     changed = (
@@ -314,14 +317,11 @@ def read_upsert_changes(
     """
     import warnings
 
-    log = _log_table(table)
+    df = _committed_log_df(spark, table, commit_log_dir)
     if commit_log_dir is not None:
-        from stream_sentinel_spark.streaming.manifest import _entries
-
-        df = _committed_log_df(spark, table, commit_log_dir)
         rewrites = [
             e
-            for (e, k) in _entries(spark, commit_log_dir)
+            for (e, k) in log_entries(spark, commit_log_dir)
             if k >= 1 and e > since_epoch
         ]
         if rewrites:
@@ -337,8 +337,6 @@ def read_upsert_changes(
                 UserWarning,
                 stacklevel=2,
             )
-    else:
-        df = spark.table(log)
     out = df.filter(F.col("_epoch") > int(since_epoch))
     if until_epoch is not None:
         # bounded window (since, until]: lets a consumer page the feed
@@ -395,18 +393,18 @@ def commit_consumer_offset(
     """Atomically advance the consumer offset (write-temp + rename of a
     NEW marker — the same primitive as the producer's commit log), then
     best-effort prune the superseded markers."""
-    from stream_sentinel_spark.streaming.manifest import (
-        _delete_entry,
-        _write_atomic,
+    from stream_sentinel_spark.streaming.exactly_once import (
+        delete_entry,
+        write_atomic,
     )
 
     epoch = int(epoch)
-    _write_atomic(
+    write_atomic(
         spark, consumer_dir, f"{_OFFSET_PREFIX}{epoch}", {"epoch": epoch}
     )
     for old in _offset_markers(spark, consumer_dir):
         if old < epoch:
-            _delete_entry(spark, consumer_dir, f"{_OFFSET_PREFIX}{old}")
+            delete_entry(spark, consumer_dir, f"{_OFFSET_PREFIX}{old}")
 
 
 def consumer_lag(
@@ -417,10 +415,10 @@ def consumer_lag(
     (in epochs — the unit both sides commit in). Two directory
     listings, no data read; the number an operator alerts on, exactly
     like Kafka consumer-group lag."""
-    from stream_sentinel_spark.streaming.manifest import INIT_EPOCH, _entries
+    from stream_sentinel_spark.streaming.manifest import INIT_EPOCH
 
     committed = [
-        e for (e, k) in _entries(spark, commit_log_dir) if k == 0 and e >= 0
+        e for (e, k) in log_entries(spark, commit_log_dir) if k == 0 and e >= 0
     ]
     latest = max(committed, default=INIT_EPOCH)
     offset = read_consumer_offset(spark, consumer_dir)
@@ -477,13 +475,11 @@ def follow_upsert_changes(
     Scale shape: each page is one O(page change volume) feed read plus
     the consumer's own work; the offset commit is one small rename.
     Nothing scans the full log, nothing blocks the producer."""
-    from stream_sentinel_spark.streaming.manifest import _entries
-
     if max_epochs_per_page is not None and max_epochs_per_page < 1:
         raise ValueError(
             f"max_epochs_per_page must be >= 1, got {max_epochs_per_page}"
         )
-    committed = [e for (e, k) in _entries(spark, commit_log_dir) if k == 0]
+    committed = [e for (e, k) in log_entries(spark, commit_log_dir) if k == 0]
     latest = max((e for e in committed if e >= 0), default=None)
     offset = read_consumer_offset(spark, consumer_dir)
     pages: list[tuple[int, int]] = []
@@ -624,23 +620,19 @@ def maintain_agg_view(
         )
         from stream_sentinel_spark.sources.bucketing import (
             recover_compaction,
+            swap_table,
             write_plain,
         )
 
         recover_compaction(spark, view)
-        tmp = f"{view}__compacting"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp}")
         # the tmp build reads the live view — materialize it fully
         # before the swap so the DROP can't pull files out from under
         # a lazy plan. coalesce(1): the view is O(|groups|) small by
         # construction, and the shuffle-partition-count of the merge
         # join otherwise fans it into dozens of near-empty files that
         # every subsequent page's read and swap re-lists
-        write_plain(merged.coalesce(1).localCheckpoint(eager=True), tmp)
-        if spark.catalog.tableExists(view):
-            spark.sql(f"DROP TABLE {view}")
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {view}")
-        spark.catalog.refreshTable(view)
+        pinned = merged.coalesce(1).localCheckpoint(eager=True)
+        swap_table(spark, view, lambda tmp: write_plain(pinned, tmp))
 
     # heal a swap that crashed mid-rename BEFORE reading the offset:
     # the replay guard consults the view's stamp
@@ -680,15 +672,19 @@ def compact_upsert_log(
     expire-snapshots with a configured retention point rather than
     all-or-nothing.
 
-    ``num_buckets`` RE-BUCKETS during the rewrite (default: keep the
-    current count) — layout evolution for a log that outgrew its
-    original bucket count (per-bucket file size is the compaction
+    ``num_buckets`` RE-BUCKETS during the rewrite — layout evolution
+    for a log that outgrew its original bucket count (per-bucket file size is the compaction
     read/write unit, so at 100 TB bucket count tracks table size the
     way Iceberg evolves partition specs). The rewrite is the one moment
     re-bucketing is free: the data is being rewritten anyway, and every
     downstream plan property (Exchange-free snapshot/history/feed
     merges) holds under the NEW count because the bucket spec, not the
-    number, is what the plans ride.
+    number, is what the plans ride. An explicit count is persisted as
+    the log's bucket policy. ``None`` (the default) follows the policy
+    the log was created with: an auto-sized log (the loop's
+    ``num_buckets=None``) is re-sized to its SURVIVING rows —
+    superseded versions and expired history are not counted — and an
+    explicitly sized one keeps its count.
 
     Same swap-and-recover discipline as ``compact_bucketed``; no
     lineage pinning is needed — ``write_bucketed`` fully materializes
@@ -697,17 +693,18 @@ def compact_upsert_log(
     (≤ num_buckets)."""
     from stream_sentinel_spark.operators.cdc import merge_latest
     from stream_sentinel_spark.sources.bucketing import (
+        auto_num_buckets,
         recover_compaction,
+        swap_table,
         table_num_buckets,
         write_bucketed,
     )
 
     log = _log_table(table)
     recover_compaction(spark, log)
+    policy = "explicit" if num_buckets is not None else _bucket_policy(spark, log)
     if num_buckets is None:
         num_buckets = table_num_buckets(spark, log)
-    tmp = f"{log}__compacting"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
     if keep_since is None:
         kept = merge_latest(
             spark.table(log), list(key_cols), list(seq_cols),
@@ -724,13 +721,32 @@ def compact_upsert_log(
             op_col=op_col, delete_op=delete_op,
         )
         kept = baseline.unionByName(log_df.filter(horizon))
-    write_bucketed(
-        kept, tmp, list(key_cols), num_buckets, align=True,
-    )
-    spark.sql(f"DROP TABLE {log}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {log}")
-    spark.catalog.refreshTable(log)
+    if policy == "auto":
+        num_buckets = auto_num_buckets(kept.count())
+
+    def rewrite(tmp: str) -> None:
+        write_bucketed(kept, tmp, list(key_cols), num_buckets, align=True)
+        _set_bucket_policy(spark, tmp, policy)
+
+    swap_table(spark, log, rewrite)
     return len(spark.table(log).inputFiles())
+
+
+_BUCKET_POLICY = "sentinel.num_buckets"
+
+
+def _bucket_policy(spark: SparkSession, log: str) -> str:
+    """``"auto"`` for a log created with ``num_buckets=None``; else
+    ``"explicit"`` (also for logs older than the property)."""
+    rows = spark.sql(f"SHOW TBLPROPERTIES {log}").collect()
+    auto = any(r.key == _BUCKET_POLICY and r.value == "auto" for r in rows)
+    return "auto" if auto else "explicit"
+
+
+def _set_bucket_policy(spark: SparkSession, log: str, policy: str) -> None:
+    spark.sql(
+        f"ALTER TABLE {log} SET TBLPROPERTIES ('{_BUCKET_POLICY}' = '{policy}')"
+    )
 
 
 def _align_log_schema(
@@ -839,46 +855,59 @@ def make_upsert_batch_fn(
         table_num_buckets,
         write_bucketed,
     )
+    from stream_sentinel_spark.streaming.manifest import EpochProtocol
 
     log = _log_table(table)
-    n_appends = [0]
+
+    def compact(spark: SparkSession) -> None:
+        keep_since = None
+        if compact_horizon is not None:
+            keep_since = compact_horizon(spark.table(log))
+        compact_upsert_log(
+            spark, table, key_cols, seq_cols, op_col=op_col,
+            delete_op=delete_op, keep_since=keep_since,
+        )
+
+    protocol = EpochProtocol(
+        commit_log_dir,
+        tables=[log],
+        compact_every=compact_every,
+        maintain=compact,
+        refresh_session=refresh_session,
+    )
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # Heal a compaction that crashed between DROP and RENAME before
-        # ANY tableExists check: without this, the unbound-log window
-        # would make the append below recreate the log with
-        # mode='overwrite', silently discarding all pre-crash state —
-        # and compact_every WITHOUT commit_log_dir has no other recovery
-        # path (with commit_log_dir, loop-start recovery also heals it,
-        # but a same-process mid-loop compaction failure would not
-        # restart the loop). Idempotent, two catalog lookups.
-        recover_compaction(spark, log)
-        if commit_log_dir is not None:
-            from stream_sentinel_spark.streaming.exactly_once import (
-                is_epoch_committed,
-            )
 
-            if is_epoch_committed(spark, commit_log_dir, epoch_id):
-                return
-        payload = [c for c in batch_df.columns if c != INGEST_COL]
-        if any(c.lower() == "_epoch" for c in payload):
-            # the loop OWNS the provenance stamp; silently overwriting a
-            # user column of the same name would corrupt their data and
-            # the feed's epoch filter at once
-            raise ValueError(
-                "upsert change stream carries a column named '_epoch' — "
-                "that name is reserved for the loop's provenance stamp "
-                "(the change feed and aggregate delta filter on it); "
-                "rename the source column"
+        def work(_label) -> bool:
+            # Heal a compaction that crashed between DROP and RENAME
+            # before ANY tableExists check: without this, the unbound-log
+            # window would make the append below recreate the log with
+            # mode='overwrite', silently discarding all pre-crash state —
+            # and compact_every WITHOUT commit_log_dir has no other
+            # recovery path (with commit_log_dir, loop-start recovery
+            # also heals it, but a same-process mid-loop compaction
+            # failure would not restart the loop). Idempotent, two
+            # catalog lookups.
+            recover_compaction(spark, log)
+            payload = [c for c in batch_df.columns if c != INGEST_COL]
+            if any(c.lower() == "_epoch" for c in payload):
+                # the loop OWNS the provenance stamp; silently
+                # overwriting a user column of the same name would
+                # corrupt their data and the feed's epoch filter at once
+                raise ValueError(
+                    "upsert change stream carries a column named '_epoch' "
+                    "— that name is reserved for the loop's provenance "
+                    "stamp (the change feed and aggregate delta filter on "
+                    "it); rename the source column"
+                )
+            batch = (
+                batch_df.select(*payload)
+                .withColumn("_epoch", F.lit(int(epoch_id)))
+                .localCheckpoint(eager=True)
             )
-        batch = (
-            batch_df.select(*payload)
-            .withColumn("_epoch", F.lit(int(epoch_id)))
-            .localCheckpoint(eager=True)
-        )
-        appended = False
-        if batch.take(1):
+            if not batch.take(1):
+                return False
             exists = spark.catalog.tableExists(log)
             if exists and evolve_schema:
                 batch = _align_log_schema(spark, log, batch)
@@ -891,9 +920,8 @@ def make_upsert_batch_fn(
             # wrote 32 near-empty files per append, and once the log
             # crossed the ~32-path parallel-listing threshold every
             # page read of the change feed paid a distributed
-            # file-listing JOB; production-scale epochs auto-size up
-            # (or callers pass the count), and a log that outgrows its
-            # creation count re-buckets at compaction.
+            # file-listing JOB. The choice is persisted with the log
+            # (compact_upsert_log re-sizes auto-sized logs only).
             nb = (
                 table_num_buckets(spark, log)
                 if exists
@@ -907,65 +935,13 @@ def make_upsert_batch_fn(
                 batch, log, list(key_cols), nb,
                 mode="append" if exists else "overwrite", align=True,
             )
-            n_appends[0] += 1
-            appended = True
-            if refresh_session is not None:
-                refresh_session.catalog.refreshTable(log)
-        if commit_log_dir is not None:
-            from stream_sentinel_spark.streaming.manifest import (
-                commit_epoch_manifest,
-                snapshot_state,
-            )
+            if not exists:
+                _set_bucket_policy(
+                    spark, log, "explicit" if num_buckets is not None else "auto"
+                )
+            return True
 
-            tables = [log] if spark.catalog.tableExists(log) else []
-            commit_epoch_manifest(
-                spark, commit_log_dir, epoch_id,
-                snapshot_state(spark, epoch_id, tables, []),
-            )
-        if compact_every and appended and n_appends[0] % compact_every == 0:
-            keep_since = (
-                compact_horizon(spark.table(log))
-                if compact_horizon is not None
-                else None
-            )
-            # auto-sized logs (num_buckets=None at creation) RE-BUCKET
-            # at compaction to the current volume: a stream whose first
-            # trigger was small (the typical ramp-up) would otherwise
-            # stay pinned at the creation-time floor forever, and the
-            # rewrite is the one moment re-bucketing is free (the data
-            # moves anyway — see compact_upsert_log). Sized from the
-            # pre-compaction row count (one count of the log the
-            # compaction is about to read in full); explicit caller
-            # counts are never second-guessed.
-            compact_nb = (
-                auto_num_buckets(spark.table(log).count())
-                if num_buckets is None
-                else None
-            )
-            if commit_log_dir is not None:
-                from stream_sentinel_spark.streaming import manifest as mf
-
-                mf.write_compact_pending(
-                    spark, commit_log_dir, epoch_id, [log]
-                )
-                compact_upsert_log(
-                    spark, table, key_cols, seq_cols,
-                    op_col=op_col, delete_op=delete_op,
-                    keep_since=keep_since, num_buckets=compact_nb,
-                )
-                mf.write_aux_snapshot(
-                    spark, commit_log_dir, epoch_id,
-                    mf.snapshot_state(spark, epoch_id, [log], []),
-                )
-                mf.clear_compact_pending(spark, commit_log_dir)
-            else:
-                compact_upsert_log(
-                    spark, table, key_cols, seq_cols,
-                    op_col=op_col, delete_op=delete_op,
-                    keep_since=keep_since, num_buckets=compact_nb,
-                )
-            if refresh_session is not None:
-                refresh_session.catalog.refreshTable(log)
+        protocol(spark, epoch_id, work)
 
     return run
 
@@ -996,18 +972,20 @@ def recover_upsert_ingest(
         recover_ingest_state,
     )
 
+    from stream_sentinel_spark.sources.bucketing import recover_compaction
+
     log = _log_table(table)
-    exists = spark.catalog.tableExists(log)
-    if exists:
+    recover_compaction(spark, log)
+    if spark.catalog.tableExists(log):
         manifest = latest_manifest(spark, commit_log_dir)
         if manifest is not None and log not in manifest.get("tables", {}):
             spark.sql(f"DROP TABLE {log}")
             spark.sql(f"DROP TABLE IF EXISTS {log}__compacting")
-            exists = False
+    # listed even when absent: snapshots skip a log not created yet
     return recover_ingest_state(
         spark,
         commit_log_dir,
-        append_tables=[log] if exists else [],
+        append_tables=[log],
         refresh_session=refresh_session,
     )
 
@@ -1032,12 +1010,8 @@ def run_upsert_ingest(
             table=batch_kwargs["table"],
             commit_log_dir=batch_kwargs["commit_log_dir"],
         )
-    writer = (
-        stream_df.writeStream.foreachBatch(make_upsert_batch_fn(**batch_kwargs))
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("append")
-        .queryName(query_name)
+    return start_foreach_batch(
+        stream_df, make_upsert_batch_fn(**batch_kwargs),
+        checkpoint_location=checkpoint_location, query_name=query_name,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

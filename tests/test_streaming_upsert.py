@@ -1089,14 +1089,14 @@ def test_maintain_agg_view_tracks_snapshot(spark, tmp_path):
 def _lose_offset(spark, consumer_dir):
     """Simulate a crash that lost the offset write: remove every offset
     marker, as if the consumer died before its first post-page rename."""
-    from stream_sentinel_spark.streaming.manifest import _delete_entry
+    from stream_sentinel_spark.streaming.exactly_once import delete_entry
     from stream_sentinel_spark.streaming.upsert import (
         _OFFSET_PREFIX,
         _offset_markers,
     )
 
     for e in _offset_markers(spark, consumer_dir):
-        _delete_entry(spark, consumer_dir, f"{_OFFSET_PREFIX}{e}")
+        delete_entry(spark, consumer_dir, f"{_OFFSET_PREFIX}{e}")
 
 
 def test_maintain_agg_view_replay_guard(spark, tmp_path):
@@ -1301,7 +1301,7 @@ def test_compaction_rebuckets_auto_sized_log_to_current_volume(spark):
         )
         fn(big, 1)  # 2nd append → compaction fires → re-bucket
         n_rows = spark.table(f"{table}_log").count()
-        want = auto_num_buckets(n_rows + 0)  # sized from pre-compaction count
+        want = auto_num_buckets(n_rows)  # every row survives compaction
         assert want > 4, "fixture must outgrow the floor"
         assert table_num_buckets(spark, f"{table}_log") == auto_num_buckets(
             len(E0) + 120_000
@@ -1314,5 +1314,146 @@ def test_compaction_rebuckets_auto_sized_log_to_current_volume(spark):
         assert sorted(
             (r.k, r.seq, r.val) for r in snap.filter("k <= 3").collect()
         ) == [(1, 10, "a0"), (2, 10, "b0"), (3, 10, "c0")]
+    finally:
+        _drop(spark, table)
+
+
+def test_auto_rebucket_sizes_from_surviving_rows(spark):
+    """An auto-sized log re-buckets to the rows its compaction KEEPS:
+    superseded versions are dropped by the rewrite, so counting them
+    would size the log for volume it no longer has."""
+    from stream_sentinel_spark.sources.bucketing import (
+        auto_num_buckets,
+        table_num_buckets,
+    )
+
+    table = _table()
+    try:
+        fn = make_upsert_batch_fn(
+            table=table, key_cols=["k"], seq_cols=["seq"], op_col="op",
+            compact_every=2,
+        )
+        fn(_changes(spark, E0), 0)
+        # two versions of each of 55,000 keys: 110,003 rows before the
+        # compaction, 55,003 live rows after it
+        versions = spark.range(110_000).select(
+            (F.col("id") % 55_000 + 10).alias("k"),
+            (F.col("id") / 55_000 + 50).cast("long").alias("seq"),
+            F.lit("U").alias("op"),
+            F.col("id").cast("string").alias("val"),
+        )
+        fn(versions, 1)
+        assert auto_num_buckets(110_003) > auto_num_buckets(55_003)
+        assert spark.table(f"{table}_log").count() == 55_003
+        assert table_num_buckets(spark, f"{table}_log") == auto_num_buckets(
+            55_003
+        )
+    finally:
+        _drop(spark, table)
+
+
+def test_explicit_bucket_count_survives_restart_without_it(spark):
+    """The explicit-vs-auto choice is persisted with the log: a loop
+    restarted with num_buckets=None must not re-size a log that was
+    created with an explicit count."""
+    from stream_sentinel_spark.sources.bucketing import table_num_buckets
+
+    table = _table()
+    try:
+        make_upsert_batch_fn(
+            table=table, key_cols=["k"], seq_cols=["seq"], op_col="op",
+            num_buckets=16,
+        )(_changes(spark, E0), 0)
+        restarted = make_upsert_batch_fn(
+            table=table, key_cols=["k"], seq_cols=["seq"], op_col="op",
+            compact_every=1,
+        )
+        restarted(_changes(spark, E1), 1)  # compaction fires
+        assert table_num_buckets(spark, f"{table}_log") == 16
+        assert _snap_rows(spark, table) == _batch_twin(spark, E0 + E1)
+    finally:
+        _drop(spark, table)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("creating", [False, True], ids=["append", "create"])
+def test_upsert_loop_recovers_from_every_crash_point(
+    spark, monkeypatch, tmp_path, creating
+):
+    """The upsert twin of the ingest loop's enumerated crash matrix
+    (tests/crash_points.py): an epoch with compaction due is crashed
+    after each of its storage mutations in turn — an append epoch, and
+    the first epoch, which creates the log and records its bucket
+    policy; recovery plus replay must reproduce the uncrashed run's
+    snapshot, and a second recovery must find nothing to do."""
+    from tests.crash_points import (
+        InjectedCrash,
+        MutationLog,
+        expected_recovery,
+        recording,
+    )
+
+    table = _table()
+    epoch_id, rows = (0, E0) if creating else (1, E1)
+
+    def new_fn(commits):
+        return make_upsert_batch_fn(
+            table=table, key_cols=["k"], seq_cols=["seq"], op_col="op",
+            commit_log_dir=commits, compact_every=1,
+        )
+
+    def start(commits):
+        _drop(spark, table)
+        assert recover_upsert_ingest(
+            spark, table=table, commit_log_dir=commits
+        )["init_snapshot"]
+        if not creating:
+            new_fn(commits)(_changes(spark, E0), 0)
+        return new_fn(commits)
+
+    try:
+        fn = start(str(tmp_path / "ref"))
+        with recording(monkeypatch, MutationLog()) as ref_log:
+            fn(_changes(spark, rows), epoch_id)
+        want = _snap_rows(spark, table)
+        assert want == _batch_twin(spark, E0 if creating else E0 + E1)
+        n, kinds = len(ref_log.events), ref_log.kinds
+        assert {"saveAsTable", "rename", "sql", "delete"} <= set(kinds), kinds
+        for k in range(1, n + 1):
+            case = f"upsert crash after mutation {k}/{n} ({kinds[k - 1]})"
+            commits = str(tmp_path / f"c{k}")
+            fn = start(commits)
+            with recording(monkeypatch, MutationLog(k)) as log:
+                with pytest.raises(InjectedCrash):
+                    fn(_changes(spark, rows), epoch_id)
+            assert log.kinds == kinds[:k], case
+            report = recover_upsert_ingest(
+                spark, table=table, commit_log_dir=commits
+            )
+            want_report = expected_recovery(
+                log.events, epoch_id, has_stats=False
+            )
+            if creating and want_report["orphans"]:
+                # an uncommitted first epoch: the log no manifest knows
+                # is dropped whole, not diffed
+                assert not spark.catalog.tableExists(f"{table}_log"), case
+                want_report["orphans"] = set()
+            assert set(report["orphans_deleted"]) == want_report["orphans"], (
+                case, report,
+            )
+            assert (
+                report["compaction_recovered"]
+                == want_report["compaction_recovered"]
+            ), (case, report)
+            new_fn(commits)(_changes(spark, rows), epoch_id)  # replay
+            assert _snap_rows(spark, table) == want, case
+            again = recover_upsert_ingest(
+                spark, table=table, commit_log_dir=commits
+            )
+            assert not (
+                again["orphans_deleted"] or again["compaction_recovered"]
+            ), (case, again)
+        print(f"upsert loop ({'create' if creating else 'append'}): "
+              f"{n} mutation points")
     finally:
         _drop(spark, table)
