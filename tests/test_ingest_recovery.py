@@ -395,6 +395,183 @@ def test_lsh_loop_recovers_from_every_crash_point(
     assert _run_crash_matrix(spark, monkeypatch, tmp_path_factory, "lsh")
 
 
+# ---------------------------------------------------------------------------
+# named crash sites over two epochs of real data: the matrix above runs
+# one small epoch; these crash the SECOND of two committed-in-sequence
+# epochs, so recovery must roll back to a non-init snapshot
+# ---------------------------------------------------------------------------
+
+
+def _mk_fn(table, root, **kw):
+    return make_dedup_ingest_batch_fn(
+        table=table, kind="minhash", id_col="doc_id", content_col="text",
+        threshold=THRESH, accepted_path=f"{root}/acc",
+        matches_path=f"{root}/match", commit_log_dir=f"{root}/commits", **kw,
+    )
+
+
+def _sink_rows(spark, path):
+    df = spark.read.parquet(path)
+    id_col = "doc_id" if "doc_id" in df.columns else "new_id"
+    return sorted(
+        (r[id_col], r.epoch) for r in df.select(id_col, "epoch").collect()
+    )
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, docs, tmp_path_factory):
+    """The no-crash reference: build + epochs 0,1 through the SAME batch
+    fn (commit log on), with the recovery hook run at 'loop start'."""
+    root = str(tmp_path_factory.mktemp("ing_clean"))
+    _drop(spark, "ing_rcref")
+    build_minhash_index(_batch(docs, 0), "ing_rcref", num_hashes=32, bands=8)
+    recover_dedup_ingest(
+        spark, table="ing_rcref", commit_log_dir=f"{root}/commits",
+        accepted_path=f"{root}/acc", matches_path=f"{root}/match",
+    )
+    fn = _mk_fn("ing_rcref", root)
+    fn(_batch(docs, 1), 0)
+    fn(_batch(docs, 2), 1)
+    yield root
+    _drop(spark, "ing_rcref")
+
+
+# one crash site per append in the epoch's write sequence, plus the
+# window after all writes but before the commit rename
+CRASH_POINTS = ["after_bands_append", "after_stats_merge", "before_commit"]
+
+
+def _install_crash(monkeypatch, point):
+    boom = RuntimeError(f"injected crash: {point}")
+    if point == "after_bands_append":
+        # _merge_bandstats is imported inside append_minhash_index at
+        # call time: raising at its entry crashes after the first of the
+        # three index appends (the _bands file append) has completed
+        import stream_sentinel_spark.operators.similarity as sim
+
+        def die(*a, **k):
+            raise boom
+
+        monkeypatch.setattr(sim, "_merge_bandstats", die)
+    elif point == "after_stats_merge":
+        import stream_sentinel_spark.operators.similarity as sim
+
+        real = sim._merge_bandstats
+
+        def through_then_die(*a, **k):
+            real(*a, **k)
+            raise boom
+
+        monkeypatch.setattr(sim, "_merge_bandstats", through_then_die)
+    elif point == "before_commit":
+        # the epoch-{id} rename is the commit: every write is done
+        import stream_sentinel_spark.streaming.manifest as mf
+
+        def die(*a, **k):
+            raise boom
+
+        monkeypatch.setattr(mf, "commit_epoch", die)
+    else:  # pragma: no cover
+        raise AssertionError(point)
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_crash_mid_epoch_recovers_to_clean_run(
+    spark, docs, clean_run, tmp_path_factory, monkeypatch, point
+):
+    table = f"ing_rc_{CRASH_POINTS.index(point)}"
+    root = str(tmp_path_factory.mktemp(f"ing_{point}"))
+    _drop(spark, table)
+    build_minhash_index(_batch(docs, 0), table, num_hashes=32, bands=8)
+    recover = lambda: recover_dedup_ingest(
+        spark, table=table, commit_log_dir=f"{root}/commits",
+        accepted_path=f"{root}/acc", matches_path=f"{root}/match",
+    )
+    init_report = recover()  # loop start: writes the init snapshot
+    assert init_report["init_snapshot"]
+    fn = _mk_fn(table, root)
+    fn(_batch(docs, 1), 0)
+
+    pre_crash = _index_state(spark, table)
+    with monkeypatch.context() as m:
+        _install_crash(m, point)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            fn(_batch(docs, 2), 1)
+
+    # the crash must have left PARTIAL state behind (otherwise the test
+    # is vacuous) ...
+    assert _index_state(spark, table) != pre_crash or point == "before_commit"
+    # ... which 'restart' recovery rolls back to the last committed epoch
+    report = recover()
+    assert not report["init_snapshot"]
+    assert report["orphans_deleted"], report
+    if point == "after_stats_merge":
+        # the stats append completed before the crash: its inventory
+        # disagrees with the snapshot, so it is rebuilt from the
+        # recovered bands
+        assert report["stats_rebuilt"], report
+    assert _index_state(spark, table) == pre_crash
+
+    # Structured Streaming replays the uncommitted epoch; the replay
+    # runs against the byte-clean state and commits
+    fn(_batch(docs, 2), 1)
+
+    assert _index_state(spark, table) == _index_state(spark, "ing_rcref")
+    assert _sink_rows(spark, f"{root}/acc") == _sink_rows(spark, f"{clean_run}/acc")
+    assert _sink_rows(spark, f"{root}/match") == _sink_rows(
+        spark, f"{clean_run}/match"
+    )
+    probe = _batch(docs, 4)
+    assert _probe_rows(spark, table, probe) == _probe_rows(
+        spark, "ing_rcref", probe
+    )
+    # a second recovery on the now-clean state is a strict no-op
+    report = recover()
+    assert not report["orphans_deleted"] and not report["stats_rebuilt"]
+    _drop(spark, table)
+
+
+def test_compaction_mid_swap_crash_recovers(spark, docs, tmp_path_factory):
+    """Compaction WAL: the DROP→RENAME crash window (table unbound,
+    __compacting complete) with the compact-pending marker on disk;
+    recovery must restore the binding, re-snapshot, and clear the
+    marker — and the loop must keep answering identically."""
+    import stream_sentinel_spark.streaming.manifest as mf
+
+    root = str(tmp_path_factory.mktemp("ing_cwal"))
+    table = "ing_cwal"
+    _drop(spark, table)
+    build_minhash_index(_batch(docs, 0), table, num_hashes=32, bands=8)
+    recover = lambda: recover_dedup_ingest(
+        spark, table=table, commit_log_dir=f"{root}/commits",
+        accepted_path=f"{root}/acc", matches_path=f"{root}/match",
+    )
+    recover()
+    fn = _mk_fn(table, root)
+    fn(_batch(docs, 1), 0)
+    probe = _batch(docs, 4)
+    want = _probe_rows(spark, table, probe)
+
+    # crash state: pending marker written, bands table mid-swap
+    mf.write_compact_pending(
+        spark, f"{root}/commits", 0, [f"{table}_bands", f"{table}_verify"]
+    )
+    spark.sql(f"ALTER TABLE {table}_bands RENAME TO {table}_bands__compacting")
+
+    report = recover()
+    assert report["compaction_recovered"], report
+    assert mf._read_json(spark, f"{root}/commits", mf._PENDING) is None
+    assert spark.catalog.tableExists(f"{table}_bands")
+    assert _probe_rows(spark, table, probe) == want
+    # the post-recovery snapshot is now the latest manifest, so a
+    # subsequent plain recovery diffs cleanly against it
+    report = recover()
+    assert not report["compaction_recovered"]
+    assert not report["orphans_deleted"], report
+    assert not report["stats_rebuilt"], report
+    _drop(spark, table)
+
+
 def test_external_compaction_rotates_location_and_cleans(
     spark, docs, tmp_path_factory
 ):
