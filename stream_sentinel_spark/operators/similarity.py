@@ -845,17 +845,24 @@ def _read_bandstats(spark, table: str, keys: list) -> DataFrame:
     return spark.table(table).groupBy(*keys).agg(F.sum("_na").alias("_na"))
 
 
-def _compact_bandstats(spark, table: str, keys: list) -> None:
-    """Rewrite the stats append-log to one aggregated row per key (one
-    file) — round 9's per-append merge, now run only at compaction
-    cadence. The aggregated frame is localCheckpoint'd before the write
+def _overwrite_bandstats(table: str, keys: list, counts: DataFrame) -> None:
+    """Replace the stats table's rows with ``counts`` (``keys`` +
+    ``_na``) — the one in-place stats writer, for compaction and the
+    recovery rebuild. ``counts`` is localCheckpoint'd before the write
     so the overwrite never reads the files it is replacing;
     ``insertInto(overwrite=True)`` preserves the table's definition and
     external location."""
-    merged = _read_bandstats(spark, table, keys).coalesce(1).localCheckpoint(
-        eager=True
+    pinned = counts.localCheckpoint(eager=True)
+    pinned.select(*keys, "_na").write.insertInto(table, overwrite=True)
+
+
+def _compact_bandstats(spark, table: str, keys: list) -> None:
+    """Rewrite the stats append-log to one aggregated row per key (one
+    file) — round 9's per-append merge, now run only at compaction
+    cadence."""
+    _overwrite_bandstats(
+        table, keys, _read_bandstats(spark, table, keys).coalesce(1)
     )
-    merged.select(*keys, "_na").write.insertInto(table, overwrite=True)
 
 
 def _lsh_kernel_frame(
@@ -1113,6 +1120,18 @@ def ivf_train(
 
     Returns unit-normalized centroids as plain Python lists (feed to
     :func:`ivf_assign` / :func:`ivf_topk`)."""
+    return _ivf_train(df, id_col, vec_col, n_cells, iters, n_rows)[0]
+
+
+def _ivf_train(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_cells: int,
+    iters: int,
+    n_rows: int | None,
+) -> tuple[list[list[float]], int]:
+    """:func:`ivf_train` plus the training row count it sized with."""
     import math
 
     # Materialize the (normalized) training set once: every Lloyd
@@ -1127,18 +1146,19 @@ def ivf_train(
     # pay ~100 python-worker round-trips for microseconds of numpy each
     # (the round-9 x20 scaling pathology — 8 cores beat 32). At-scale
     # inputs keep their natural partitioning (spread_rows never
-    # coalesces).
+    # coalesces). Without a caller-provided ``n_rows`` the count is the
+    # job that materializes the pin, so the input plan runs once; only
+    # an input that needs spreading is re-pinned in its spread layout.
     from stream_sentinel_spark.operators.partitioning import spread_rows
 
-    n_train = df.count() if n_rows is None else n_rows
-    unit = (
-        spread_rows(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_v")),
-            n_train,
-        )
-        .select("id", _unit(F.col("_v")).alias("v"))
-        .localCheckpoint(eager=True)
-    )
+    base = df.select(F.col(id_col).alias("id"), _unit(F.col(vec_col)).alias("v"))
+    pinned = n_rows is None
+    if pinned:
+        base = base.localCheckpoint(eager=False)
+        n_rows = base.count()
+    unit = spread_rows(base, n_rows)
+    if not (pinned and unit is base):
+        unit = unit.localCheckpoint(eager=True)
     seed_rows = unit.orderBy("id").limit(n_cells).select("v").collect()
     centroids = [list(r["v"]) for r in seed_rows]
     for _ in range(iters):
@@ -1164,7 +1184,7 @@ def ivf_train(
             nrm = math.sqrt(sum(x * x for x in vec)) or 1.0
             new.append([x / nrm for x in vec])
         centroids = new
-    return centroids
+    return centroids, n_rows
 
 
 def ivf_assign(
@@ -1216,15 +1236,14 @@ def ivf_topk(
     # one bounded count sizes BOTH the training and the scoring
     # parallelism to the data (see ivf_train — the round-9 x20
     # pathology was one near-empty partition per core through every
-    # Arrow-kernel stage of this pipeline). The count is the job that
-    # materializes the lazy pin, so the corpus plan runs once: training
-    # and scoring read the pinned blocks instead of re-running it.
-    corpus = corpus.select(id_col, vec_col).localCheckpoint(eager=False)
-    n_corpus = corpus.count()
+    # Arrow-kernel stage of this pipeline). Training counts the frame
+    # it pins; only pre-trained centroids need a count of their own.
     if centroids is None:
-        centroids = ivf_train(
-            corpus, id_col, vec_col, n_cells, iters, n_rows=n_corpus
+        centroids, n_corpus = _ivf_train(
+            corpus, id_col, vec_col, n_cells, iters, None
         )
+    else:
+        n_corpus = corpus.count()
     assign = _assign_cells_udf(centroids)
     c = (
         spread_rows(

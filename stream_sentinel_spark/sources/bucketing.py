@@ -241,9 +241,9 @@ def _rotated_location(location: str) -> str:
 
 
 def _delete_dir(spark: SparkSession, location: str) -> None:
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(location)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    from stream_sentinel_spark.streaming.exactly_once import _hadoop_fs
+
+    fs, p = _hadoop_fs(spark, location)
     if fs.exists(p):
         fs.delete(p, True)
 

@@ -536,6 +536,7 @@ def recover_dedup_ingest(
     cheap on a clean state (one listing per location); run it before
     (re)starting the loop — :func:`run_dedup_ingest` does so
     automatically. Returns the recovery action report."""
+    from stream_sentinel_spark.operators.similarity import _overwrite_bandstats
     from stream_sentinel_spark.streaming.manifest import recover_ingest_state
 
     append_suffixes, stats_keys = _KIND_SPEC[kind]
@@ -543,17 +544,12 @@ def recover_dedup_ingest(
 
     def rebuild_stats() -> None:
         # the stats table is derivable state: an Exchange-free groupBy
-        # of the (already-recovered) bucketed bands table, overwritten
-        # in place with the same writer the delta merge uses
+        # of the (already-recovered) bucketed bands table
         spark.catalog.refreshTable(f"{table}_bands")
-        full = (
-            spark.table(f"{table}_bands")
-            .groupBy(*stats_keys)
-            .agg(F.count(F.lit(1)).alias("_na"))
-            .localCheckpoint(eager=True)
-        )
-        full.select(*stats_keys, "_na").write.insertInto(
-            stats_table, overwrite=True
+        bands = spark.table(f"{table}_bands")
+        _overwrite_bandstats(
+            stats_table, stats_keys,
+            bands.groupBy(*stats_keys).agg(F.count(F.lit(1)).alias("_na")),
         )
 
     return recover_ingest_state(

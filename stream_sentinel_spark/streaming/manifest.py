@@ -249,8 +249,8 @@ class EpochProtocol:
         paths: Sequence[str | None] = (),
         compact_every: int | None,
         maintain: Callable[[SparkSession], object],
+        job_prefix: str,
         refresh_session: SparkSession | None = None,
-        job_prefix: str | None = None,
     ) -> None:
         self.log_dir = log_dir
         self.tables = list(tables)
@@ -279,10 +279,9 @@ class EpochProtocol:
         def label(stage: str) -> None:
             # per-stage job labels — the loop's many small jobs are
             # otherwise indistinguishable in the UI / event log
-            if self.job_prefix is not None:
-                spark.sparkContext.setJobDescription(
-                    f"{self.job_prefix} e{epoch_id}: {stage}"
-                )
+            spark.sparkContext.setJobDescription(
+                f"{self.job_prefix} e{epoch_id}: {stage}"
+            )
 
         if self.log_dir is not None and is_epoch_committed(
             spark, self.log_dir, epoch_id
@@ -314,8 +313,7 @@ class EpochProtocol:
             self._log(delete_entry, spark, _PENDING)
             self._refresh()
         finally:
-            if self.job_prefix is not None:
-                spark.sparkContext.setJobDescription(None)
+            spark.sparkContext.setJobDescription(None)
 
 
 # ---------------------------------------------------------------------------

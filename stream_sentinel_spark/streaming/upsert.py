@@ -874,6 +874,7 @@ def make_upsert_batch_fn(
         compact_every=compact_every,
         maintain=compact,
         refresh_session=refresh_session,
+        job_prefix="upsert",
     )
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:

@@ -4,9 +4,9 @@ then re-run the epoch crashing right after the k-th one, for every k.
 
 Mutations counted:
 
-- ``create`` / ``rename`` / ``delete`` on the Hadoop file systems the
-  commit log hands out (``_hadoop_fs`` of ``exactly_once`` and
-  ``manifest``);
+- ``create`` / ``rename`` / ``delete`` on the Hadoop file systems
+  ``exactly_once._hadoop_fs`` hands out (the commit log's, and the
+  location deletes of an external index's compaction);
 - every ``DataFrameWriter`` ``insertInto`` / ``saveAsTable`` /
   ``parquet`` / ``save``;
 - every ``DROP`` / ``ALTER`` statement issued through ``spark.sql``.

@@ -150,10 +150,12 @@ def _parquet_rows(location: str, cols: list[str]) -> list[tuple]:
     return sorted(rows)
 
 
-def _freeze(spark, table, tables, root):
+def _freeze(spark, table, tables, root, base=None):
     """Capture the freshly built index (catalog spec + data files) and
     the init commit log; the returned ``restore()`` puts both back with
-    a few catalog calls and file copies instead of a rebuild."""
+    a few catalog calls and file copies instead of a rebuild. ``base``:
+    the directory of an external index's locations (rotated ones too),
+    cleared before the tables are re-created at their original ones."""
     import os
     import shutil
 
@@ -170,6 +172,8 @@ def _freeze(spark, table, tables, root):
                 f" CLUSTERED BY ({info['Bucket Columns'].strip('[]')})"
                 f" INTO {info['Num Buckets']} BUCKETS"
             )
+        if info.get("Type", "").upper() == "EXTERNAL":
+            create += f" LOCATION '{info['Location']}'"
         copy = f"{root}-frozen/{t}"
         shutil.copytree(_local(table_location(spark, t)), copy)
         frozen.append((t, create, copy))
@@ -177,6 +181,8 @@ def _freeze(spark, table, tables, root):
 
     def restore():
         _drop(spark, table)
+        if base is not None:
+            shutil.rmtree(base)
         for t, create, copy in frozen:
             spark.sql(create)
             loc = _local(table_location(spark, t))
@@ -229,7 +235,11 @@ def _matrix_probe(spark, kind, table, probe, meta, kernel):
     )
 
 
-def _run_crash_matrix(spark, monkeypatch, tmp_path_factory, kind):
+def _run_crash_matrix(
+    spark, monkeypatch, tmp_path_factory, kind, external=False
+):
+    import os
+
     from stream_sentinel_spark.operators.dedup import (
         _kernel_frame,
         build_minhash_index,
@@ -238,6 +248,7 @@ def _run_crash_matrix(spark, monkeypatch, tmp_path_factory, kind):
         _lsh_kernel_frame,
         build_lsh_index,
     )
+    from stream_sentinel_spark.streaming.manifest import table_location
     from tests.crash_points import (
         InjectedCrash,
         MutationLog,
@@ -247,8 +258,10 @@ def _run_crash_matrix(spark, monkeypatch, tmp_path_factory, kind):
 
     _, id_col, content_col, threshold, _, tables = _KINDS[kind][:6]
     seed, epoch, probe = _matrix_frames(spark, kind)
-    table = f"ing_mx_{kind}"
-    root = str(tmp_path_factory.mktemp(f"mx_{kind}")) + "/run"
+    table = f"ing_mx_{kind}" + ("_ext" if external else "")
+    tmp = str(tmp_path_factory.mktemp(f"mx_{kind}"))
+    root = f"{tmp}/run"
+    base = f"{tmp}/idx" if external else None
 
     def new_fn():
         # a restart is a new process: a fresh batch fn, cadence reset
@@ -267,14 +280,20 @@ def _run_crash_matrix(spark, monkeypatch, tmp_path_factory, kind):
 
     _drop(spark, table)
     if kind == "minhash":
-        build_minhash_index(seed, table, num_hashes=32, bands=8, num_buckets=2)
+        build_minhash_index(
+            seed, table, num_hashes=32, bands=8, num_buckets=2,
+            base_path=base,
+        )
     else:
-        build_lsh_index(seed, table, num_buckets=2, hot_bucket_warn=None)
+        build_lsh_index(
+            seed, table, num_buckets=2, hot_bucket_warn=None, base_path=base
+        )
     assert recover()["init_snapshot"]
+    index_tables = [f"{table}_{t}" for t, _ in tables]
+    built_at = {t: table_location(spark, t) for t in index_tables}
     restore = _freeze(
-        spark, table,
-        [f"{table}_{s}" for s in ("meta", "bandstats", *(t for t, _ in tables))],
-        root,
+        spark, table, [f"{table}_meta", f"{table}_bandstats", *index_tables],
+        root, base,
     )
     # the probe's signature pass runs once; only the index side varies
     meta = spark.table(f"{table}_meta").head()
@@ -317,6 +336,11 @@ def _run_crash_matrix(spark, monkeypatch, tmp_path_factory, kind):
             again["orphans_deleted"] or again["stats_rebuilt"]
             or again["compaction_recovered"]
         ), (case, again)
+        # an external index swapped into a rotated location leaves no
+        # copy at the location it was built at
+        for t, loc in built_at.items():
+            if table_location(spark, t) != loc:
+                assert not os.path.exists(_local(loc)), (case, t)
 
     before = state()
     with recording(monkeypatch, MutationLog()) as ref_log:
@@ -329,6 +353,10 @@ def _run_crash_matrix(spark, monkeypatch, tmp_path_factory, kind):
     # overwrite, and the marker clear
     assert {"parquet", "saveAsTable", "insertInto", "rename", "sql",
             "delete"} <= set(kinds), kinds
+    if external:
+        # the rotation's deletes of the superseded locations are counted
+        deleted = {_local(m.target) for m in ref_log.events if m.kind == "delete"}
+        assert {_local(loc) for loc in built_at.values()} <= deleted, deleted
     committed_at = next(
         i + 1 for i, m in enumerate(ref_log.events)
         if m.kind == "rename" and m.target.endswith("/epoch-0")
@@ -371,7 +399,8 @@ def _run_crash_matrix(spark, monkeypatch, tmp_path_factory, kind):
         assert (state(), probed()) == want, case
         assert_settled(case)
     _drop(spark, table)
-    print(f"{kind} ingest loop: {n} mutation points")
+    where = "external" if external else "managed"
+    print(f"{kind} ingest loop ({where} index): {n} mutation points")
     return n
 
 
@@ -393,6 +422,19 @@ def test_lsh_loop_recovers_from_every_crash_point(
     spark, small_shuffle, monkeypatch, tmp_path_factory
 ):
     assert _run_crash_matrix(spark, monkeypatch, tmp_path_factory, "lsh")
+
+
+@pytest.mark.slow
+def test_external_minhash_loop_recovers_from_every_crash_point(
+    spark, small_shuffle, monkeypatch, tmp_path_factory
+):
+    """The MinHash matrix over an index built with ``base_path``:
+    compaction rotates each external table to a new location and
+    deletes the old one, so the rotation's deletes are crash points
+    too, and recovery must finish a relocation it interrupted."""
+    assert _run_crash_matrix(
+        spark, monkeypatch, tmp_path_factory, "minhash", external=True
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -638,9 +680,7 @@ def test_dedup_within_batch_diverts_and_equals_sequential_feed(
         _drop(spark, t)
         build_minhash_index(_batch(docs, 0), t, num_hashes=32, bands=8)
 
-    # four planted pairs: the sequential reference pays one loop epoch
-    # per row
-    originals = _batch(docs, 1).orderBy("doc_id").limit(4).localCheckpoint(
+    originals = _batch(docs, 1).orderBy("doc_id").limit(8).localCheckpoint(
         eager=True
     )
     copies = originals.withColumn(
