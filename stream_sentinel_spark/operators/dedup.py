@@ -23,6 +23,8 @@ beats interpreted higher-order expressions).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -1350,6 +1352,7 @@ def _hot_salted_pair_join(
     cutoff: int = _HOT_BUCKET_CUTOFF,
     max_salt: int = _HOT_SALT_MAX,
     na: DataFrame | None = None,
+    prod_bound: int | None = None,
 ) -> DataFrame:
     """Cross-frame twin of :func:`_hot_salted_self_join`: join two
     DISTINCT (id, *keys) frames on ``keys``, emitting every (a_id,
@@ -1368,17 +1371,25 @@ def _hot_salted_pair_join(
     ``na`` optionally supplies PRECOMPUTED a-side bucket counts
     (``*keys``, ``_na`` — one row per a-side bucket). A stored index
     (similarity.build_lsh_index) persists these at build time so the
-    per-batch probe never re-aggregates the corpus-sized a frame."""
+    per-batch probe never re-aggregates the corpus-sized a frame.
+
+    ``prod_bound``: an upper bound on every bucket's n_a·n_b that the
+    caller already knows (the ingest loop tracks one — see
+    :func:`match_minhash_index`). When it is within cutoff² no bucket
+    can be hot, so the plain plan is taken without the probe job; the
+    plan is the one the probe would have picked."""
+    bound = cutoff * cutoff
+    a = a_keyed.select(F.col("id").alias("a_id"), *keys)
+    b = b_keyed.select(F.col("id").alias("b_id"), *keys)
+    if prod_bound is not None and prod_bound <= bound:
+        return a.join(b, list(keys)).drop(*keys)
     if na is None:
         na = a_keyed.groupBy(*keys).agg(F.count(F.lit(1)).alias("_na"))
     nb = b_keyed.groupBy(*keys).agg(F.count(F.lit(1)).alias("_nb"))
     prods = na.join(nb, list(keys)).select(
         *keys, (F.col("_na") * F.col("_nb")).alias("_prod")
     )
-    bound = cutoff * cutoff
     max_prod = prods.agg(F.max("_prod")).first()[0]
-    a = a_keyed.select(F.col("id").alias("a_id"), *keys)
-    b = b_keyed.select(F.col("id").alias("b_id"), *keys)
     if max_prod is None or max_prod <= bound:
         return a.join(b, list(keys)).drop(*keys)
     hot = F.broadcast(
@@ -1425,19 +1436,25 @@ def minhash_lsh_candidates(
     return _band_raw_pairs(sig, num_hashes, bands).distinct()
 
 
-def _exact_verify(cands: DataFrame, sets_: DataFrame, threshold: float) -> DataFrame:
+def _exact_verify(
+    cands: DataFrame,
+    sets_: DataFrame,
+    threshold: float,
+    b_sets: DataFrame | None = None,
+) -> DataFrame:
     """Exact Jaccard verification of candidate (a_id, b_id) pairs against
     a per-doc shingle-set frame (id, grams, sz). Shared by the prefix-
     filter and LSH operators so the verify semantics cannot diverge.
     Candidates are re-spread first (:func:`partitioning.spread_pairs`) —
     the per-pair array_intersect is the expensive part and must not run
-    in an AQE-coalesced post-distinct stage."""
+    in an AQE-coalesced post-distinct stage. ``b_sets``: a separate
+    frame for the b side (the a side then reads ``sets_`` alone)."""
     cands = _spread_pairs(cands)
     da = sets_.select(
         F.col("id").alias("a_id"), F.col("grams").alias("a_grams"),
         F.col("sz").alias("a_sz"),
     )
-    db = sets_.select(
+    db = (sets_ if b_sets is None else b_sets).select(
         F.col("id").alias("b_id"), F.col("grams").alias("b_grams"),
         F.col("sz").alias("b_sz"),
     )
@@ -1544,13 +1561,36 @@ def minhash_verified_pairs(
     return _adaptive_verify(cands, docs, threshold)
 
 
+class VerifyRegime:
+    """The verify regime of one ingest loop over one stored index —
+    loop-scoped state, kept by the loop between epochs and handed to
+    :func:`match_minhash_index` as ``regime=``. ``exact`` turns True
+    the first time the probe picks array-intersect and stays True:
+    under a single writer the index's doc count and vocabulary only
+    grow, so the corpus never moves back under the bitmask caps. Both
+    regimes compute the same exact ``shared`` and ``jaccard``; the
+    record changes time, never values."""
+
+    __slots__ = ("exact",)
+
+    def __init__(self) -> None:
+        self.exact = False
+
+
 def _adaptive_verify(
-    cands: DataFrame, docs: DataFrame, threshold: float
+    cands: DataFrame,
+    docs: DataFrame,
+    threshold: float,
+    b_docs: DataFrame | None = None,
+    regime: VerifyRegime | None = None,
 ) -> DataFrame:
     """Regime-probed exact-Jaccard verification of (a_id, b_id)
-    candidates against a MATERIALIZED (id, codes, sz) frame — shared by
-    the self-join and cross-frame minhash operators so both get the
-    degenerate-corpus fast path.
+    candidates against an (id, codes, sz) frame — shared by the
+    self-join and cross-frame minhash operators so both get the
+    degenerate-corpus fast path. ``b_docs``: a separate frame for the
+    b side (a stored index's verify table as ``docs``, the batch kernel
+    as ``b_docs``), so each join reads only its own side; the probes
+    below read both.
 
     The probe: the complete vocabulary IS the probe — collect at most
     cap+1 distinct codes (a dimension-sized pull, same class as IVF
@@ -1558,25 +1598,39 @@ def _adaptive_verify(
     sorted-int array_intersect; otherwise fixed-width bitmask popcount
     (on a degenerate corpus LSH buckets collapse and the candidate set
     explodes toward all-pairs, where popcount-of-AND over a few longs
-    per pair beats array intersection several-fold). The doc-count
-    probe counts the checkpointed frame's pinned blocks — near-free —
-    and bounds by docs-that-have-signatures (the set the quadratic
-    regimes actually touch)."""
-    sets_ = docs.select("id", F.col("codes").alias("grams"), "sz")
-    # doc-count guard FIRST: counting the pinned frame is near-free,
-    # and a production-scale corpus (the normal incremental regime)
-    # must not pay the vocabulary probe's explode+distinct pass just to
-    # be routed to array-intersect anyway
-    if docs.count() > _ALLPAIRS_MAX_DOCS:
-        return _exact_verify(cands, sets_, threshold)
+    per pair beats array intersection several-fold). The doc count
+    bounds by docs-that-have-signatures (the set the quadratic regimes
+    actually touch). Both probes scan every doc they are given, so a
+    caller over a stored index passes ``regime`` to run them only
+    until array-intersect is picked; the bitmask regime probes every
+    call, since its vocabulary must cover the new codes."""
+
+    def sets(frame: DataFrame | None) -> DataFrame | None:
+        if frame is None:
+            return None
+        return frame.select("id", F.col("codes").alias("grams"), "sz")
+
+    def exact() -> DataFrame:
+        if regime is not None:
+            regime.exact = True
+        return _exact_verify(cands, sets(docs), threshold, sets(b_docs))
+
+    if regime is not None and regime.exact:
+        return exact()
+    probed = docs if b_docs is None else docs.unionByName(b_docs)
+    # doc-count guard FIRST: a production-scale corpus (the normal
+    # incremental regime) must not pay the vocabulary probe's
+    # explode+distinct pass just to be routed to array-intersect anyway
+    if probed.count() > _ALLPAIRS_MAX_DOCS:
+        return exact()
     vocab_rows = (
-        docs.select(F.explode("codes").alias("c"))
+        probed.select(F.explode("codes").alias("c"))
         .distinct()
         .limit(_BITMASK_VOCAB_MAX + 1)
         .collect()
     )
     if len(vocab_rows) > _BITMASK_VOCAB_MAX:
-        return _exact_verify(cands, sets_, threshold)
+        return exact()
     # re-spread before the popcount verify — the AQE-coalesced
     # post-distinct stage must not serialize it (see
     # partitioning.spread_pairs; _exact_verify spreads its own input for
@@ -1584,14 +1638,18 @@ def _adaptive_verify(
     cands = _spread_pairs(cands)
     vocab = sorted(r["c"] & 0xFFFF_FFFF_FFFF_FFFF for r in vocab_rows)
     nwords = (len(vocab) + 63) // 64
-    masks = docs.select(
-        "id", "sz", _code_mask_udf(vocab, nwords)(F.col("codes")).alias("mask")
-    )
-    da = F.broadcast(masks.select(
+    mask = _code_mask_udf(vocab, nwords)
+
+    def masks(frame: DataFrame) -> DataFrame:
+        return frame.select("id", "sz", mask(F.col("codes")).alias("mask"))
+
+    a_masks = masks(docs)
+    b_masks = a_masks if b_docs is None else masks(b_docs)
+    da = F.broadcast(a_masks.select(
         F.col("id").alias("a_id"), F.col("sz").alias("a_sz"),
         F.col("mask").alias("a_mask"),
     ))
-    db = F.broadcast(masks.select(
+    db = F.broadcast(b_masks.select(
         F.col("id").alias("b_id"), F.col("sz").alias("b_sz"),
         F.col("mask").alias("b_mask"),
     ))
@@ -1854,31 +1912,33 @@ def _epoch_frames(
     text_col: str,
     n: int,
     num_hashes: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(batch, kernel) for one ingest-loop epoch off a SINGLE eager
-    checkpoint: the payload columns and the signature struct
-    materialize in one job, and both frames are projections (plus the
-    kernel's sig-notnull filter) over the pinned blocks. Round 9
-    checkpointed the batch and the kernel separately — one extra
-    materialization job and an extra pass over the batch per epoch
-    (guide §1.2/§2.6: the loop's cost is jobs-per-epoch). Kernel rows
-    and values are bit-identical to :func:`_kernel_frame` over the same
-    rows (same Arrow UDF, same filter); the batch rows are exactly the
-    source payload (the signature struct is dropped, never written).
-    A payload column named like the ``_sc`` working column raises."""
+) -> tuple[DataFrame, str, Callable[[DataFrame], tuple[DataFrame, DataFrame]]]:
+    """One ingest-loop epoch's working frame: ``(combined, key,
+    split)``. ``combined`` holds the payload columns and the signature
+    struct under ONE lazy pin — the loop's row count is the job that
+    materializes it; ``key`` is its id column; ``split(frame)`` projects
+    ``combined``, or any row subset of it, to (batch, kernel). So the
+    loop can pin one more subset (the accepted rows) and slice both of
+    its frames from that pin. Kernel rows and values are bit-identical
+    to :func:`_kernel_frame` over the same rows (same Arrow UDF, same
+    filter); the batch rows are exactly the source payload (the
+    signature struct is dropped, never written). A payload column
+    named like the ``_sc`` working column raises."""
     _reject_working_columns(payload, {"_sc"})
     sig_code = _text_sig_code_udf(n, num_hashes)(F.col(text_col))
     combined = (
         _spread(batch.select(*payload))
         .withColumn("_sc", sig_code)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    kernel = (
-        combined.select(
+
+    def split(frame: DataFrame) -> tuple[DataFrame, DataFrame]:
+        kernel = frame.select(
             F.col(id_col).alias("id"), "_sc.sig", "_sc.codes", "_sc.sz"
         ).filter(F.col("sig").isNotNull())
-    )
-    return combined.drop("_sc"), kernel
+        return frame.drop("_sc"), kernel
+
+    return combined, id_col, split
 
 
 def build_minhash_index(
@@ -2076,21 +2136,44 @@ def match_minhash_index(
     *,
     meta=None,
     kernel: DataFrame | None = None,
+    prod_bound: int | None = None,
+    regime: VerifyRegime | None = None,
 ) -> DataFrame:
     """Match an incoming batch of documents against a stored
     :func:`build_minhash_index` — the same output contract as
     :func:`incremental_neardups` ((new_id, n_matches, best_jaccard,
     first_match); unmatched new docs absent) and bit-equal values
-    (pinned in tests/test_minhash_index.py), with the corpus paying
-    nothing per batch beyond bucket-local join reads: signatures,
-    shingle codes, band keys, and bucket counts all come from the index
-    tables. Same disjoint-id-space precondition as the one-shot path.
+    (pinned in tests/test_minhash_index.py). Signatures, shingle codes,
+    band keys and bucket counts come from the index tables; the match
+    reads the corpus through two scans: the bucketed band keys for the
+    candidates and ``{table}_verify`` for the a side of the verify (the
+    b side reads the batch alone). Same disjoint-id-space precondition
+    as the one-shot path.
+
+    Called alone, the match also runs probes before it: the hot-bucket
+    probe (:func:`_hot_salted_pair_join`) aggregates the stored bucket
+    counts, and the verify-regime probes (:func:`_adaptive_verify`)
+    count and collect over the whole verify table. An ingest loop
+    skips them with loop-scoped state, valid while it is the index's
+    single writer (the manifest protocol's assumption):
+
+    - ``prod_bound``: an upper bound on every bucket's n_a·n_b — the
+      loop's bound on the largest stored bucket count (read once,
+      raised by each append's accepted rows, since a doc adds at most
+      one row per (band, bucket)) times the batch's row count. Within
+      cutoff² the plain plan is taken with no probe job.
+    - ``regime``: the loop's :class:`VerifyRegime`; once it records
+      array-intersect, the verify probes do not run again.
+
+    Neither changes a value: both only pick among plans that compute
+    the same rows.
 
     ``meta`` / ``kernel``: same contract as
     :func:`append_minhash_index` — a precomputed meta row and a
     materialized kernel frame over exactly the rows of ``new`` skip the
     per-call meta read and the signature pass (the ingest loop computes
     one kernel per epoch and feeds each stage a slice of it)."""
+    from stream_sentinel_spark.operators.similarity import _read_bandstats
     from stream_sentinel_spark.sources.bucketing import bucketed
 
     if meta is None:
@@ -2101,19 +2184,21 @@ def match_minhash_index(
         else _kernel_frame(new, id_col, text_col, meta.n, meta.num_hashes)
     )
     kwargs = {} if cutoff is None else {"cutoff": cutoff}
-    from stream_sentinel_spark.operators.similarity import _read_bandstats
-
     cands = _hot_salted_pair_join(
         bucketed(spark, f"{table}_bands").withColumnRenamed("old_id", "id"),
         _banded_keys(new_kernel.select("id", "sig"), meta.num_hashes, meta.bands),
         ["band", "bucket"],
         na=_read_bandstats(spark, f"{table}_bandstats", ["band", "bucket"]),
+        prod_bound=prod_bound,
         **kwargs,
     ).distinct()
-    docs = spark.table(f"{table}_verify").withColumnRenamed(
-        "old_id", "id"
-    ).unionByName(new_kernel.select("id", "codes", "sz"))
-    pairs = _adaptive_verify(cands, docs, threshold)
+    pairs = _adaptive_verify(
+        cands,
+        spark.table(f"{table}_verify").withColumnRenamed("old_id", "id"),
+        threshold,
+        b_docs=new_kernel.select("id", "codes", "sz"),
+        regime=regime,
+    )
     return pairs.groupBy(F.col("b_id").alias("new_id")).agg(
         F.count(F.lit(1)).alias("n_matches"),
         F.max("jaccard").alias("best_jaccard"),

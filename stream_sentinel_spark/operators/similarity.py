@@ -16,6 +16,7 @@ Two tiers:
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -889,16 +890,16 @@ def _lsh_epoch_frames(
     bits: int,
     dim: int,
     seed: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(batch, kernel) for one ingest-loop epoch off a SINGLE eager
-    checkpoint — the embedding twin of
+) -> tuple[DataFrame, str, Callable[[DataFrame], tuple[DataFrame, DataFrame]]]:
+    """One ingest-loop epoch's working frame, ``(combined, key,
+    split)`` — the embedding twin of
     :func:`~stream_sentinel_spark.operators.dedup._epoch_frames`: the
-    payload columns, the signature and the norm materialize in one job;
-    both frames are projections over the pinned blocks. Kernel values
-    are bit-identical to :func:`_lsh_kernel_frame` over the same rows
-    (same signature expression/kernel, same norm). A payload column
-    named like a working column (``_nrm``, ``sig``, or ``id`` when the
-    id column is named otherwise) raises."""
+    payload columns, the signature and the norm under one lazy pin;
+    ``split`` projects it, or any row subset of it, to (batch, kernel).
+    Kernel values are bit-identical to :func:`_lsh_kernel_frame` over
+    the same rows (same signature expression/kernel, same norm). A
+    payload column named like a working column (``_nrm``, ``sig``, or
+    ``id`` when the id column is named otherwise) raises."""
     from stream_sentinel_spark.operators.dedup import _reject_working_columns
     from stream_sentinel_spark.operators.partitioning import spread_small
 
@@ -912,13 +913,17 @@ def _lsh_epoch_frames(
             id_col, vec_col, bits, dim, seed, carry=carry,
         )
         .withColumn("_nrm", norm(_as_double(F.col(vec_col))))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    kernel = combined.select(
-        "id", F.col(vec_col).alias("vec"), "sig", F.col("_nrm").alias("nrm")
-    )
-    b = combined.select(F.col("id").alias(id_col), *carry).select(*payload)
-    return b, kernel
+
+    def split(frame: DataFrame) -> tuple[DataFrame, DataFrame]:
+        kernel = frame.select(
+            "id", F.col(vec_col).alias("vec"), "sig", F.col("_nrm").alias("nrm")
+        )
+        b = frame.select(F.col("id").alias(id_col), *carry).select(*payload)
+        return b, kernel
+
+    return combined, "id", split
 
 
 def _kernel_band_keys(kernel: DataFrame, bits: int, bands: int, id_alias: str) -> DataFrame:
@@ -944,13 +949,17 @@ def index_candidates(
     *,
     meta=None,
     kernel: DataFrame | None = None,
+    prod_bound: int | None = None,
 ) -> DataFrame:
     """(old_id, new_id) candidate pairs of an incoming batch against a
     stored :func:`build_lsh_index` — the per-batch plan computes
     signatures for NEW rows only; the corpus side is a bucketed FileScan
     of the stored band keys (no Exchange, no signature recompute), and
     the hot-bucket probe reads the stored per-bucket counts instead of
-    re-aggregating the corpus."""
+    re-aggregating the corpus. ``prod_bound``: a caller-known upper
+    bound on every bucket's n_a·n_b that skips the probe when it rules
+    salting out (the ingest loop's bound — see
+    :func:`~stream_sentinel_spark.operators.dedup.match_minhash_index`)."""
     from stream_sentinel_spark.operators.dedup import _hot_salted_pair_join
     from stream_sentinel_spark.sources.bucketing import bucketed
 
@@ -973,6 +982,7 @@ def index_candidates(
             new_chunks,
             ["band", "val"],
             na=_read_bandstats(spark, f"{table}_bandstats", ["band", "val"]),
+            prod_bound=prod_bound,
             **kwargs,
         )
         .select(F.col("a_id").alias("old_id"), F.col("b_id").alias("new_id"))
@@ -991,14 +1001,16 @@ def match_lsh_index(
     *,
     meta=None,
     kernel: DataFrame | None = None,
+    prod_bound: int | None = None,
 ) -> DataFrame:
     """Match an incoming batch against a stored :func:`build_lsh_index`
     — same output contract as :func:`cosine_pairs_lsh_incremental`
     ((new_id, n_matches, best_cos, first_match); unmatched new vectors
     absent) and bit-equal values (pinned by tests/test_embedding_index),
-    but the corpus pays NOTHING per batch beyond bucket-local join reads:
-    signatures, norms, band keys, and bucket counts all come from the
-    index tables.
+    with no signature or norm recompute on the corpus side: signatures,
+    norms, band keys, and bucket counts all come from the index tables.
+    Called alone it runs the hot-bucket probe (an aggregate over the
+    stored bucket counts) before the match; ``prod_bound`` skips it.
 
     ``meta`` / ``kernel``: a precomputed meta row and a materialized
     :func:`_lsh_kernel_frame` over exactly the rows of ``new_df`` skip
@@ -1010,7 +1022,7 @@ def match_lsh_index(
     cands = spread_pairs(
         index_candidates(
             spark, new_df, table, id_col, vec_col, cutoff,
-            meta=meta, kernel=kernel,
+            meta=meta, kernel=kernel, prod_bound=prod_bound,
         )
     )
     cos_seq = _cos_seq_udf()

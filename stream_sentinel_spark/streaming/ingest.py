@@ -22,9 +22,22 @@ Scale shape (the reason this loop is viable at 100 TB corpus size):
   actually drifts the per-batch match cost upward over many epochs —
   ``compact_every`` triggers the Exchange-free one-file-per-bucket
   rewrite (``compact_*_index``) that resets it;
-- everything driver-side is bounded: one ``take(1)`` empty-batch guard
-  and one meta-row read per batch, plus (with the commit log) one
+- the fixed per-epoch work is batch-sized: one pin of the epoch's rows
+  (payload + signatures), counted; the match; one pin of the accepted
+  rows, counted — the emptiness guard — whose projections feed the
+  accepted sink and all three appends; plus (with the commit log) one
   directory listing per grown location and one small JSON rename.
+  Called alone, a match first runs probes that read the corpus side:
+  the hot-bucket probe aggregates the stored bucket counts, and the
+  MinHash verify-regime probes count and collect the whole verify
+  table. The loop skips them with loop-scoped state: an upper bound
+  on the largest stored bucket count (read once per loop, raised by
+  each append's accepted rows — a doc adds at most one row per
+  bucket), which rules salting out while bound × batch rows ≤
+  cutoff², and the verify regime once it is array-intersect (doc
+  count and vocabulary only grow). Both assume the loop is the
+  index's single writer, as the commit protocol does; neither changes
+  a value, only which of two equal plans runs.
 
 Semantics: the micro-batch is the atomicity unit, exactly like a
 sequential driver loop over the same batches (pinned bit-for-bit by
@@ -96,13 +109,15 @@ def _family(kind: str):
     """(match, append, compact, prepare_epoch) for an index kind.
 
     ``prepare_epoch(batch_df, payload, id_col, content_col, meta)``
-    materializes the epoch's (batch, kernel) pair off ONE eager
-    checkpoint (payload columns + signatures/verify inputs in a single
-    job) that the intra, match, append and sink stages all slice —
-    round 9 cut the per-stage signature recomputes (guide §1.2: don't
-    compute things twice) but still paid two materialization jobs per
-    epoch (batch, then kernel); round 10 fuses them (guide §2.6: the
-    loop's wall is dominated by jobs-per-epoch, not bytes)."""
+    returns ``(combined, key, split)``: ONE lazily pinned frame of
+    payload columns + signatures/verify inputs (the loop's row count
+    materializes it in a single job), its id column, and ``split``,
+    which projects it or any row subset of it to (batch, kernel) — the
+    intra and match stages slice ``combined``, the sink and appends
+    slice the pinned accepted subset. Round 9 cut the per-stage
+    signature recomputes (guide §1.2: don't compute things twice);
+    round 10 fused the batch and kernel pins (guide §2.6: the loop's
+    wall is dominated by jobs-per-epoch, not bytes)."""
     if kind == "minhash":
         from stream_sentinel_spark.operators.dedup import (
             _epoch_frames,
@@ -391,7 +406,15 @@ def make_dedup_ingest_batch_fn(
     ``commit_log_dir``: enables BOTH the committed-epoch replay guard
     and the atomic-append manifest protocol (module doc). Run
     :func:`recover_dedup_ingest` at loop start (automatic via
-    :func:`run_dedup_ingest`) to restore a crashed run's state."""
+    :func:`run_dedup_ingest`) to restore a crashed run's state.
+
+    Between epochs the batch fn keeps an upper bound on the index's
+    largest bucket count and, for MinHash, the verify regime, so the
+    match skips its probes (module doc). Both assume this loop is the
+    index's only writer — the commit protocol's assumption too: no
+    other process may append to ``table`` while the loop runs."""
+    from stream_sentinel_spark.operators.dedup import VerifyRegime
+    from stream_sentinel_spark.operators.similarity import _read_bandstats
     from stream_sentinel_spark.streaming.manifest import EpochProtocol
 
     match_fn, append_fn, compact_fn, prepare_epoch = _family(kind)
@@ -417,11 +440,25 @@ def make_dedup_ingest_batch_fn(
     # compaction preserve it) — read it once per loop, not once per
     # stage per epoch (three catalog reads + head() jobs per batch)
     meta_box: list = []
+    # loop-scoped facts that let the match skip its probes (module doc;
+    # valid because the loop is the index's single writer): an upper
+    # bound on the largest stored bucket count, read once and raised by
+    # every append, and the MinHash verify regime once it is exact
+    na_box: list = []
+    match_state = {"regime": VerifyRegime()} if kind == "minhash" else {}
 
     def _meta(spark: SparkSession):
         if not meta_box:
             meta_box.append(spark.table(f"{table}_meta").head())
         return meta_box[0]
+
+    def _na_bound(spark: SparkSession) -> int:
+        if not na_box:
+            stats = _read_bandstats(
+                spark, f"{table}_bandstats", _KIND_SPEC[kind][1]
+            )
+            na_box.append(stats.agg(F.max("_na")).first()[0] or 0)
+        return na_box[0]
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -430,19 +467,21 @@ def make_dedup_ingest_batch_fn(
             # the ingestion stamp is transport plumbing, not document
             # payload — it must reach neither the index nor the sinks
             payload = [c for c in batch_df.columns if c != INGEST_COL]
-            # ONE eager checkpoint per epoch (payload + signatures +
-            # verify inputs in a single job — round 9 paid two: a batch
-            # materialization, then a kernel pass over it); every stage
-            # below consumes projections/slices of the pinned blocks, so
-            # no consumer re-reads the source files and the append's
-            # lineage never reaches into the index tables it is writing
+            # ONE pin per epoch (payload + signatures + verify inputs);
+            # the row count is the job that materializes it, and every
+            # stage below consumes projections/slices of the pinned
+            # blocks, so no consumer re-reads the source files and the
+            # append's lineage never reaches into the index tables it
+            # is writing
             label("epoch checkpoint")
             meta = _meta(spark)
-            batch, kernel = prepare_epoch(
+            combined, key, split = prepare_epoch(
                 batch_df, payload, id_col, content_col, meta
             )
-            if not batch.take(1):
+            n_rows = combined.count()
+            if not n_rows:
                 return False
+            batch, kernel = split(combined)
             survivors = batch
             surv_kernel = kernel
             intra = None
@@ -451,9 +490,8 @@ def make_dedup_ingest_batch_fn(
                 intra = _intra_batch_matches(
                     kind, threshold, intra_mode, meta, kernel
                 ).localCheckpoint(eager=True)
-                # lazy anti-joins of checkpointed frames: each consumer
-                # re-derives a broadcast anti-join over pinned blocks —
-                # cheaper than materializing another copy per stage
+                # lazy anti-joins of pinned frames: only the match
+                # reads them
                 survivors = batch.join(
                     intra.select(F.col("new_id").alias(id_col)), [id_col],
                     "left_anti",
@@ -467,8 +505,15 @@ def make_dedup_ingest_batch_fn(
                 spark, survivors, table, id_col, content_col,
                 threshold=threshold, cutoff=cutoff,
                 meta=meta, kernel=surv_kernel,
-            ).localCheckpoint(eager=True)
+                # a doc adds at most one row per bucket, so no bucket's
+                # batch count exceeds the epoch's row count
+                prod_bound=_na_bound(spark) * n_rows,
+                **match_state,
+            )
             if matches_path is not None:
+                # two consumers (this sink and the accepted pin below):
+                # pin the match once instead of running it twice
+                matches = matches.localCheckpoint(eager=True)
                 out = matches
                 if intra is not None:
                     out = matches.withColumn(
@@ -477,38 +522,34 @@ def make_dedup_ingest_batch_fn(
                 out.withColumn("epoch", F.lit(epoch_id)).write.mode(
                     "append"
                 ).parquet(matches_path)
-            # accepted stays LAZY: its consumers (the sink write, the
-            # take(1) emptiness guard and the appends' kernel slice)
-            # derive broadcast anti-joins over the pinned batch/matches
-            # blocks inside their own jobs — round 9's eager copy was
-            # one more materialization job per epoch holding a third
-            # copy of the batch. (An Observation metric on the sink
-            # write was tried for the emptiness signal and discarded:
-            # it saves one tiny pinned-block job but couples the loop
-            # to async listener delivery — a blocking get with no
-            # timeout is the wrong failure mode for a production
-            # stream.)
+            # ONE pin of the accepted rows: the epoch frame minus the
+            # broadcast set of matched and intra-diverted ids. Its row
+            # count is the job that materializes it (and, unless the
+            # matches sink pinned it above, runs the match — hence
+            # still under the match label); the count is the emptiness
+            # guard and raises the bucket-count bound. The sink and all
+            # three index appends read projections of the pinned
+            # blocks, so none of them re-derives the anti-join or the
+            # match
+            dropped = matches.select(F.col("new_id").alias(key))
+            if intra is not None:
+                dropped = dropped.union(intra.select(F.col("new_id").alias(key)))
+            kept = combined.join(
+                F.broadcast(dropped), [key], "left_anti"
+            ).localCheckpoint(eager=False)
+            n_accepted = kept.count()
             label("accepted")
-            accepted = survivors.join(
-                matches.select(F.col("new_id").alias(id_col)), [id_col],
-                "left_anti",
-            )
+            accepted, acc_kernel = split(kept)
             if accepted_path is not None:
                 accepted.withColumn("epoch", F.lit(epoch_id)).write.mode(
                     "append"
                 ).parquet(accepted_path)
-            if not accepted.take(1):
+            if not n_accepted:
                 return False
-            # the accepted slice of the epoch kernel feeds all three
-            # index writes — each re-derives this anti-join over the
-            # pinned kernel/matches blocks (no signature recompute; the
-            # kernel rows of sig-less docs are absent by construction,
-            # exactly as the per-stage recomputation filtered them)
             label("index append")
-            acc_kernel = surv_kernel.join(
-                matches.select(F.col("new_id").alias("id")), ["id"],
-                "left_anti",
-            )
+            # raised BEFORE the writes: a crash inside them leaves the
+            # bound above the stored counts, never below
+            na_box[0] += n_accepted
             append_fn(
                 accepted, table, id_col, content_col,
                 meta=meta, kernel=acc_kernel,

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -58,3 +59,19 @@ def spark() -> SparkSession:
     )
     yield session
     session.stop()
+
+
+def count_jobs(spark: SparkSession, fn, *args, **kwargs) -> int:
+    """Number of Spark jobs ``fn(*args, **kwargs)`` runs, broadcast and
+    adaptive stage jobs included (they inherit the caller's job
+    group). Read from the status tracker, which keeps the last
+    ``spark.ui.retainedJobs`` (1000 by default) jobs."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -285,3 +285,151 @@ def test_compact_every_preserves_results_and_caps_files(
         _drop(spark, "ing_cmp")
         spark.sql("DROP TABLE IF EXISTS ing_cmp_bands__compacting")
         spark.sql("DROP TABLE IF EXISTS ing_cmp_verify__compacting")
+
+
+# ---------------------------------------------------------------------------
+# Jobs per epoch, and the loop state that skips the match's probes.
+# ---------------------------------------------------------------------------
+
+
+def _loop_epochs(spark, docs, table, root, batches, **kw):
+    """Drive ``batches`` through a fresh batch fn over a fresh index
+    built from residue 0; per epoch: (match rows, accepted ids)."""
+    _drop(spark, table)
+    build_minhash_index(_batch(docs, 0), table, num_hashes=32, bands=8)
+    fn = make_dedup_ingest_batch_fn(
+        table=table, kind="minhash", id_col="doc_id", content_col="text",
+        threshold=THRESH, matches_path=f"{root}/matches",
+        accepted_path=f"{root}/accepted", **kw,
+    )
+    for epoch, b in enumerate(batches):
+        fn(b, epoch)
+    matches = spark.read.parquet(f"{root}/matches")
+    accepted = spark.read.parquet(f"{root}/accepted")
+    out = [
+        (
+            _match_rows(matches.filter(F.col("epoch") == e).drop("epoch")),
+            sorted(
+                r.doc_id for r in accepted.filter(F.col("epoch") == e).collect()
+            ),
+        )
+        for e in range(len(batches))
+    ]
+    _drop(spark, table)
+    return out
+
+
+#: measured jobs of the second epoch of a loop (4 cores, 8 shuffle
+#: partitions); the probes of the match run in the first epoch only
+_STEADY_EPOCH_JOBS = {"minhash": 23, "minhash-exact": 19, "lsh": 19}
+
+
+@pytest.mark.parametrize("case", sorted(_STEADY_EPOCH_JOBS))
+def test_steady_epoch_job_budget(spark, docs, tmp_path, monkeypatch, case):
+    """A steady ingest epoch runs no corpus-wide probe (the hot-bucket
+    probe is ruled out by the loop's bucket-count bound, the verify
+    regime is kept once exact) and reads the pinned accepted rows in
+    every sink and append instead of re-deriving the anti-join — the
+    epoch's job count stays within the measured budget. The default
+    sf0.001 documents verify by bitmask, whose vocabulary is collected
+    every epoch; ``minhash-exact`` pins the array-intersect regime."""
+    from tests.conftest import count_jobs
+
+    if case == "lsh":
+        from stream_sentinel_spark.operators.similarity import build_lsh_index
+
+        emb = load_table(spark, SF_DIR, "embeddings")
+        table = "ing_jobs_lsh"
+        for suffix in ("bands", "vecs", "bandstats", "meta"):
+            spark.sql(f"DROP TABLE IF EXISTS {table}_{suffix}")
+        build_lsh_index(emb.filter(F.col("vec_id") % 5 == 0), table)
+        batches = [emb.filter(F.col("vec_id") % 5 == m) for m in (1, 2)]
+        kw = {"kind": "lsh", "id_col": "vec_id", "content_col": "embedding",
+              "threshold": 0.40}
+    else:
+        if case == "minhash-exact":
+            from stream_sentinel_spark.operators import dedup
+
+            monkeypatch.setattr(dedup, "_BITMASK_VOCAB_MAX", 0)
+        table = "ing_jobs_mh"
+        _drop(spark, table)
+        build_minhash_index(_batch(docs, 0), table, num_hashes=32, bands=8)
+        batches = [_batch(docs, m) for m in (1, 2)]
+        kw = {"threshold": THRESH}
+    fn = make_dedup_ingest_batch_fn(
+        table=table, accepted_path=str(tmp_path / "acc"),
+        commit_log_dir=str(tmp_path / "commits"), **kw,
+    )
+    jobs = [count_jobs(spark, fn, b, e) for e, b in enumerate(batches)]
+    for suffix in ("bands", "vecs", "verify", "bandstats", "meta"):
+        spark.sql(f"DROP TABLE IF EXISTS {table}_{suffix}")
+    assert jobs[1] <= _STEADY_EPOCH_JOBS[case], jobs
+
+
+def test_hot_bucket_fallback_equals_default_cutoff(
+    spark, docs, sequential, tmp_path, monkeypatch
+):
+    """With a cutoff so small that the loop's bound cannot rule salting
+    out, every epoch runs the exact probe and takes the salted plan —
+    and accepts and matches exactly what the default-cutoff run does."""
+    from stream_sentinel_spark.operators import dedup
+
+    salted = []
+    real = dedup._hot_salted_pair_join
+
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        salted.append("_chunk" in out._jdf.queryExecution().logical().toString())
+        return out
+
+    monkeypatch.setattr(dedup, "_hot_salted_pair_join", spy)
+    got = _loop_epochs(
+        spark, docs, "ing_cut", tmp_path,
+        [_batch(docs, m) for m in range(1, 1 + N_BATCHES)], cutoff=1,
+    )
+    assert salted == [True] * N_BATCHES
+    assert got == sequential
+
+
+def test_verify_regimes_give_identical_matches(spark, docs, tmp_path, monkeypatch):
+    """The loop keeps the array-intersect regime once it is picked. The
+    same epochs run in the bitmask regime (the degenerate sf0.001
+    vocabulary), in the exact regime (vocabulary cap 0), and with a
+    doc cap that only the first epoch's index + batch exceeds — so a
+    fresh probe at the second epoch would flip back to bitmask, and
+    the loop stays exact — give identical matches and accepts."""
+    from stream_sentinel_spark.operators import dedup
+
+    batches = [
+        _batch(docs, 1),
+        docs.filter(F.col("doc_id") % 10 == 2),
+        docs.filter(F.col("doc_id") % 10 == 3),
+    ]
+    exact = []
+    real = dedup._exact_verify
+
+    def spy(*args, **kwargs):
+        exact.append(True)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_exact_verify", spy)
+    bitmask = _loop_epochs(spark, docs, "ing_rgm", tmp_path / "b", batches)
+    assert not exact and any(m for m, _ in bitmask)
+
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_BITMASK_VOCAB_MAX", 0)
+        assert _loop_epochs(
+            spark, docs, "ing_rgm", tmp_path / "x", batches
+        ) == bitmask
+    assert len(exact) == len(batches)
+
+    exact.clear()
+    n_index = _batch(docs, 0).count()
+    cap = n_index + batches[0].count() - 1
+    n_accepted_0 = len(bitmask[0][1])
+    # a fresh probe at epoch 1 sees the index (grown by epoch 0's
+    # accepts) plus the batch: under the cap, so it would pick bitmask
+    assert n_index + n_accepted_0 + batches[1].count() <= cap
+    monkeypatch.setattr(dedup, "_ALLPAIRS_MAX_DOCS", cap)
+    assert _loop_epochs(spark, docs, "ing_rgm", tmp_path / "f", batches) == bitmask
+    assert len(exact) == len(batches)

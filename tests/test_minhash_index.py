@@ -182,6 +182,27 @@ def test_match_plan_exchange_free_after_appends(
     assert plan.count("hashpartitioning(band") == 1, plan
 
 
+@pytest.mark.parametrize("vocab_max", [None, 0], ids=["bitmask", "exact"])
+def test_match_plan_reads_verify_once_without_union(
+    spark, frames, appended_index, monkeypatch, vocab_max
+):
+    """The verify joins read ``{table}_verify`` for the a side and the
+    batch kernel for the b side — one scan of the stored table and no
+    Union of it with the batch (which would make both joins read the
+    whole corpus), in both verify regimes."""
+    from stream_sentinel_spark.operators import dedup
+
+    if vocab_max is not None:
+        monkeypatch.setattr(dedup, "_BITMASK_VOCAB_MAX", vocab_max)
+    _, new = frames
+    matched = match_minhash_index(spark, new, appended_index, threshold=0.8)
+    plan = matched._sc._jvm.PythonSQLUtils.explainString(
+        matched._jdf.queryExecution(), "simple"
+    )
+    assert plan.count(f"default.{appended_index}_verify") == 1, plan
+    assert "Union" not in plan, plan
+
+
 def test_compaction_resets_files_and_preserves_matches(spark, frames):
     """compact_minhash_index rewrites the append-grown tables into ≤1
     file per bucket (the file count is the proof the rewrite was
