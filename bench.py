@@ -2,8 +2,9 @@
 """BENCH harness (SURVEY §7.1 M5, protocol in BASELINE.md).
 
 Runs the full declared query corpus (``__spark_entry__.queries()``) at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints JSON lines::
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 testdata) on the host-sized
+session of ``testing.local_session`` (``$SPARK_GRAFT_CPUS`` cores, else
+every CPU this process may use) and prints JSON lines::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -34,50 +35,10 @@ def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
-def build_spark(cpus: int):
-    from pyspark.sql import SparkSession
+def build_spark():
+    from stream_sentinel_spark.testing import local_session
 
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stream-sentinel-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # Spark generates a Java class per query stage; a 44-query corpus
-        # overflows the JVM's default 240 MB code cache, after which the
-        # JIT intermittently stops compiling and identical stages swing
-        # 3-5x in wall clock (measured: minhash signature agg 2.5 s vs
-        # 31.7 s run-to-run). Standard Spark ops guidance for
-        # codegen-heavy workloads.
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing",
-        )
-        # The corpus operators use localCheckpoint barriers; their pinned
-        # blocks are only released by the ContextCleaner AFTER a driver
-        # GC notices the RDD is unreferenced. The default periodic GC
-        # (30 min) never fires inside one bench run, so storage/GC
-        # pressure accumulates across the full corpus and late queries degrade
-        # 3-5x (measured: same corpus 86 s vs 230 s run-to-run). The
-        # bench loop also forces a driver GC between queries.
-        .config("spark.cleaner.periodicGC.interval", "1min")
-        .config("spark.ui.enabled", "false")
-        # Even with the UI off, the app/SQL status stores retain
-        # metadata for 1000 jobs/stages and 1000 SQL executions —
-        # including each execution's full plan graph. A 178-query
-        # corpus run accumulates thousands of stages and very large
-        # plan strings there, pure heap/GC drag on late queries. These
-        # caps bound the stores without touching what is timed (same
-        # knob class as the periodic-GC setting above).
-        .config("spark.ui.retainedJobs", "100")
-        .config("spark.ui.retainedStages", "200")
-        .config("spark.ui.retainedTasks", "10000")
-        .config("spark.sql.ui.retainedExecutions", "20")
-        .config("spark.worker.ui.retainedExecutors", "20")
-        .getOrCreate()
-    )
+    return local_session("stream-sentinel-spark-bench").getOrCreate()
 
 
 def materialize(df) -> int:
@@ -225,7 +186,6 @@ def bench_streaming(spark, sf_dir: str) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # min-of-2 by default: the host this runs on shows outside-VM load
     # spikes that can inflate a single 2 s query to 30 s; one repeat
     # rejects those spikes (BASELINE.md's protocol calls for median-of-3
@@ -236,9 +196,11 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     import __spark_entry__ as entry_mod
+    from stream_sentinel_spark.testing import driver_mem_mb
 
-    spark = build_spark(cpus)
+    spark = build_spark()
     spark.sparkContext.setLogLevel("WARN")
+    cpus = spark.sparkContext.defaultParallelism
 
     # untimed warm-up: JVM startup, parquet reader init, first codegen —
     # otherwise the first corpus query absorbs ~3 s of one-time cost
@@ -343,6 +305,7 @@ def main() -> None:
                 "sf": sf,
                 "n_queries": len(timings),
                 "cpus": cpus,
+                "driver_mem_mb": driver_mem_mb(),
                 "spark": spark.version,
                 "streaming": streaming,
                 "warm_pass_sec": warm_sec,

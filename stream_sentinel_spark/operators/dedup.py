@@ -670,7 +670,7 @@ def _containment_doc_sets(
     """The blocking stage of :func:`containment_pairs`: (pinned per-doc
     rare-sid sets, rank-cutoff position). Exposed separately so the
     scale-stress tooling can measure the candidate space with exactly
-    the operator's own blocking (tools/x70_scale_stress.py)."""
+    the operator's own blocking (``tools/stress.py dedup``)."""
     import math
 
     # Shingle ONCE into pinned per-doc arrays — the standard two-pass
@@ -724,7 +724,7 @@ def _containment_prefix_candidates(
     """The (s_id, l_id) candidate pairs of the prefix-filter regime —
     every pair colliding on an indexed (rarest-prefix) sid, deduped.
     Exposed so the scale-stress tooling can count the candidate space
-    the verify stage pays for (tools/x70_scale_stress.py)."""
+    the verify stage pays for (``tools/stress.py dedup``)."""
     plen = (
         F.col("sz") - F.floor(F.lit(threshold) * F.col("sz")) + F.lit(1)
     ).cast("int")
@@ -2041,7 +2041,7 @@ def append_minhash_index(
     as appended log rows (summed per key at read, re-aggregated at
     compaction — see similarity._merge_bandstats). The
     corpus is never rescanned — per-append cost is O(batch), flat as
-    the index grows (tools/index_scale_stress.py records it). N
+    the index grows (``tools/stress.py index`` records it). N
     appends ≡ one rebuild bit-for-bit (tests/test_minhash_index.py).
     Params and bucket count come from ``{table}_meta``.
 

@@ -12,7 +12,7 @@ def spread_small(df: DataFrame) -> DataFrame:
     `maxPartitionBytes`) scans as a SINGLE partition, which serializes
     every downstream per-row transform — shingling, minhash signatures,
     quadratic pair joins, Arrow UDF stages — onto one task no matter how
-    many cores the cluster has. Measured at local[32]: the sf0.1 shingle
+    many cores the cluster has. Measured on 32 local cores: the sf0.1 shingle
     pass 4.2 s → 0.2 s; the 2M-pair cosine stage ran one-core at ~10 s
     warm (50 s cold, absorbing JIT warm-up) before spreading.
 

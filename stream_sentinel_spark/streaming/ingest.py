@@ -17,7 +17,7 @@ Scale shape (the reason this loop is viable at 100 TB corpus size):
 - each accept is a bucket-aligned file append + an O(stats) delta
   merge (``append_minhash_index`` / ``append_lsh_index``) — per-batch
   cost depends on BATCH size, not index size
-  (tools/index_append_stress.py records the growth curves);
+  (``tools/stress.py index`` records the growth curves);
 - appends accumulate files (one per bucket per append), which is what
   actually drifts the per-batch match cost upward over many epochs —
   ``compact_every`` triggers the Exchange-free one-file-per-bucket

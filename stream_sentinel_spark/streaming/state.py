@@ -508,7 +508,7 @@ def stateful_alerts(
     timers (observed: state fully evicted to 0 rows, 300+ empty batches
     and counting). TTL is for CONTINUOUS jobs; batch-drain/replay runs
     (``run_available_now``, availableNow triggers) should leave
-    ``state_ttl_ms=None``. tools/streaming_scale_stress.py drives the
+    ``state_ttl_ms=None``. ``tools/stress.py streaming`` drives the
     TTL leg with a continuous trigger + explicit stop for this reason."""
     keyed, specs, value_cols = _prepare_keyed(
         events, rules, key_field, time_col, order_cols, rule_indexes, event_columns

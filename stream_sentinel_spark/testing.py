@@ -1,5 +1,10 @@
-"""Skewed-corpus generator for scale validation of the dedup/similarity
-family (VERDICT r3 item 4).
+"""The host-sized local session builder, and the skewed-corpus
+generators for scale validation of the dedup/similarity family (VERDICT
+r3 item 4).
+
+``local_session`` is the one builder every local session comes from:
+the test suite, ``bench.py`` and ``tools/``. ``job.build_session``
+stays separate because spark-submit sets its master and memory.
 
 The driver testdata tops out at 5 000 documents (sf0.1); the adaptive
 salting cutoffs and regime guards in ``operators/dedup.py`` are sized
@@ -30,6 +35,7 @@ DataFrame either way.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -42,18 +48,59 @@ _ALPHABET = np.array(list("abcdefghijklmnopqrstuvwxyz"))
 QUERY_ID_OFFSET = 1_000_000_000
 
 
-def stress_session() -> SparkSession:
-    """The one session config both stress tools run under — shared so
-    the dedup and ANN families are always benchmarked under identical
-    settings (same partition count, memory, GC cadence)."""
+#: Share of physical RAM given to the driver JVM heap. Sized so the
+#: sf0.1 corpus bench completes at ``nproc`` cores (BENCH_r11.json).
+DRIVER_MEM_FRACTION = 0.25
+
+
+def driver_mem_mb() -> int:
+    """``DRIVER_MEM_FRACTION`` of ``MemTotal``, in MiB."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(int(line.split()[1]) / 1024 * DRIVER_MEM_FRACTION)
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
+def local_session(app_name: str) -> SparkSession.Builder:
+    """The one host-sized local session: ``$SPARK_GRAFT_CPUS`` cores, or
+    else the CPUs this process may run on; a driver heap of
+    ``driver_mem_mb()``; shuffle partitions = cores. Returns the builder
+    so callers chain their own ``.config(...)`` before ``getOrCreate()``
+    (the memory only applies when this starts the JVM)."""
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     return (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cores}]")
+        .appName(app_name)
+        .config("spark.driver.memory", f"{driver_mem_mb()}m")
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # Spark generates a Java class per query stage; a long corpus or
+        # test run overflows the JVM's default 240 MB code cache, after
+        # which the JIT intermittently stops compiling and identical
+        # stages swing 3-5x in wall clock (measured: minhash signature
+        # agg 2.5 s vs 31.7 s run-to-run)
+        .config(
+            "spark.driver.extraJavaOptions",
+            "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing",
+        )
+        # localCheckpoint blocks are only released by the ContextCleaner
+        # after a driver GC notices the RDD is unreferenced; the default
+        # 30-min periodic GC never fires inside one run, and late
+        # queries degraded 3-5x (same corpus 86 s vs 230 s)
         .config("spark.cleaner.periodicGC.interval", "1min")
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
+        # even with the UI off, the status stores keep 1000 jobs/stages
+        # and SQL executions with their full plan graphs: heap and GC
+        # drag on long runs. ``spark.ui.retainedJobs`` also bounds what
+        # ``statusTracker`` can report.
+        .config("spark.ui.retainedJobs", "100")
+        .config("spark.ui.retainedStages", "200")
+        .config("spark.ui.retainedTasks", "10000")
+        .config("spark.sql.ui.retainedExecutions", "20")
+        .config("spark.worker.ui.retainedExecutors", "20")
     )
 
 

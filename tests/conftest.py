@@ -1,10 +1,12 @@
 from __future__ import annotations
 
-import os
+import tempfile
 import uuid
 
 import pytest
 from pyspark.sql import SparkSession
+
+from stream_sentinel_spark.testing import local_session
 
 
 def pytest_addoption(parser):
@@ -37,23 +39,9 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
-    import tempfile
-
     session = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stream-sentinel-spark-tests")
+        local_session("stream-sentinel-spark-tests")
         .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        # the full suite compiles hundreds of generated stages; the JVM's
-        # default 240 MB code cache overflows and JIT stalls make test
-        # times swing 3-5x (see bench.py build_spark)
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing",
-        )
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="ss_wh_"))
         .getOrCreate()
     )
@@ -65,7 +53,7 @@ def count_jobs(spark: SparkSession, fn, *args, **kwargs) -> int:
     """Number of Spark jobs ``fn(*args, **kwargs)`` runs, broadcast and
     adaptive stage jobs included (they inherit the caller's job
     group). Read from the status tracker, which keeps the last
-    ``spark.ui.retainedJobs`` (1000 by default) jobs."""
+    ``spark.ui.retainedJobs`` jobs (100 under ``local_session``)."""
     sc = spark.sparkContext
     group = f"count-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)

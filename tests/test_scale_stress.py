@@ -1,17 +1,18 @@
 """Skewed-corpus validation of the dedup family's scale machinery
-(VERDICT r3 item 4) — the in-suite twin of tools/dedup_scale_stress.py.
+(VERDICT r3 item 4), plus every ``stream_sentinel_spark.stress`` family
+at a small scale.
 
 The generator plants a hot near-dup cluster (single-bucket pair
 explosion) and scattered near-dup pairs with analytically-known ground
-truth; these tests pin, at every-run speed, the claims the recorded
-50k-doc stress (STRESS_r04.json) makes at scale: complete recall on the
-skewed shape, salted-plan result equivalence, and cross-frame recall.
-Set SS_STRESS=1 to run the full 50k stress through pytest.
+truth; these tests pin the claims the recorded 50k-doc stress
+(STRESS_r04.json) makes at scale: complete recall on the skewed shape,
+salted-plan result equivalence, and cross-frame recall.
+``test_stress_family`` runs each family with all of its count, recall
+and equality assertions; ``tools/stress.py <family> --scale 1`` runs it
+at recorded size, where its timing relations are asserted too.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,6 +24,7 @@ from stream_sentinel_spark.operators.dedup import (
     minhash_signatures,
     minhash_verified_pairs,
 )
+from stream_sentinel_spark.stress import FAMILIES
 from stream_sentinel_spark.testing import make_skewed_corpus
 
 # slow tier: the whole module is sized stress (skewed corpora, recall
@@ -271,15 +273,10 @@ def test_ivf_recall_on_clustered_embeddings(spark, embeddings):
     assert overlap / n_exact >= 0.9, f"IVF recall@5 {overlap}/{n_exact}"
 
 
-@pytest.mark.skipif(
-    not os.environ.get("SS_STRESS"), reason="full 50k stress: set SS_STRESS=1"
-)
-def test_full_scale_stress(tmp_path):
-    import sys
+#: 1/20 of the recorded sizes (above each family's regime floors)
+SMALL_SCALE = 0.05
 
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from dedup_scale_stress import run as run_dedup
-    from ann_scale_stress import run as run_ann
 
-    assert run_dedup(full=False, out_path=str(tmp_path / "s.json"))["all_assertions_pass"]
-    assert run_ann(out_path=str(tmp_path / "sa.json"))["all_assertions_pass"]
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_stress_family(spark, family):
+    FAMILIES[family](spark, SMALL_SCALE)

@@ -25,8 +25,7 @@ def main() -> None:
     import bench
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = bench.build_spark(cpus)
+    spark = bench.build_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod

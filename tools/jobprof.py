@@ -30,25 +30,16 @@ def main() -> None:
     args = ap.parse_args()
 
     import bench
-    from pyspark.sql import SparkSession
+    from stream_sentinel_spark.testing import local_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("jobprof")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing",
-        )
-        .config("spark.cleaner.periodicGC.interval", "1min")
+        local_session("jobprof")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4090")
+        # the REST listing must keep every job of one query, not the
+        # builder's last 100
+        .config("spark.ui.retainedJobs", "100000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -6,9 +6,9 @@ Usage::
     python tools/qtime.py x91 x92 ...        # short IDs or full names
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/qtime.py --reps 2 x86
 
-Mirrors bench.py's session configuration exactly (shuffle partitions =
-cpus, AQE on, code-cache sizing, 1-min periodic GC) so numbers are
-comparable with the official bench; runs an untimed sf0.001 warm pass
+Runs on bench.py's session (``bench.build_spark``, the host-sized
+``testing.local_session``) so numbers are comparable with the official
+bench; runs an untimed sf0.001 warm pass
 of the SELECTED queries first for steady-state JIT, then times at the
 target SF with min-of-``--reps``. Prints one JSON line per query to
 stdout plus a total.
@@ -37,8 +37,7 @@ def main() -> None:
     import bench
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = bench.build_spark(cpus)
+    spark = bench.build_spark()
     spark.sparkContext.setLogLevel("WARN")
 
     import __spark_entry__ as entry_mod
