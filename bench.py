@@ -82,7 +82,7 @@ def bench_streaming(spark, sf_dir: str) -> dict:
     Measured on the SCALE-PATH state store: the RocksDB provider
     (changelog checkpointing, memory-bounded native state — the store
     that survives 100 TB key cardinality), with the default
-    arrival-order stateful path (key-packed into 4,096 hash buckets)."""
+    arrival-order stateful path (key-packed into 256 hash buckets)."""
     import glob
     import shutil
     import tempfile

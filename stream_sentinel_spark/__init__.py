@@ -19,7 +19,15 @@ This package re-expresses those semantics Spark-first:
 - large-scale training-data operators (dedup, similarity search, text
   analysis, multimodal plumbing) live in ``operators/`` as first-class
   DataFrame transformations designed for 100 TB inputs.
+
+Importing the package also installs :mod:`stream_sentinel_spark.zipcache`,
+which spares every Python-worker task the re-read of unchanged zip
+archives that pyspark's per-task ``importlib.invalidate_caches()`` costs.
 """
+
+from stream_sentinel_spark import zipcache
+
+zipcache.install()
 
 from stream_sentinel_spark.config import EngineConfig
 from stream_sentinel_spark.rules import DetectionRule, RulesConfig

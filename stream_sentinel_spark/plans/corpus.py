@@ -5796,8 +5796,9 @@ def _streaming_detect(spark, sf, *, backend: str, watermark: str | None):
 def x84(spark, sf):
     """detect_pipeline's streaming twin, run INSIDE the correctness
     gate: events → file stream → compile_rules_streaming on the
-    arrival-order path (stateful_alerts — key-packed into 4,096 hash
-    buckets, 8.15× per-key grouping at 295 k keys) →
+    arrival-order path (stateful_alerts — key-packed into 256 hash
+    buckets; 4,096 buckets measured 8.15× per-key grouping at 295 k
+    keys) →
     availableNow drain → parquet sink (NOT a memory sink — see
     _streaming_detect's sink-choice rationale: memory sinks pin every
     alert row in the driver for the session's lifetime, which round 6

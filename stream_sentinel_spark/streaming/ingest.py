@@ -105,6 +105,14 @@ _KIND_SPEC = {
 }
 
 
+def _pinned_count(df: DataFrame) -> int:
+    """Row count of a lazily pinned (``localCheckpoint(eager=False)``)
+    frame in ONE job: a count of its RDD materializes the pin, where
+    ``DataFrame.count()`` plans an aggregate that AQE runs as two jobs
+    (shuffle stage, then result)."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
 def _family(kind: str):
     """(match, append, compact, prepare_epoch) for an index kind.
 
@@ -478,7 +486,7 @@ def make_dedup_ingest_batch_fn(
             combined, key, split = prepare_epoch(
                 batch_df, payload, id_col, content_col, meta
             )
-            n_rows = combined.count()
+            n_rows = _pinned_count(combined)
             if not n_rows:
                 return False
             batch, kernel = split(combined)
@@ -537,7 +545,7 @@ def make_dedup_ingest_batch_fn(
             kept = combined.join(
                 F.broadcast(dropped), [key], "left_anti"
             ).localCheckpoint(eager=False)
-            n_accepted = kept.count()
+            n_accepted = _pinned_count(kept)
             label("accepted")
             accepted, acc_kernel = split(kept)
             if accepted_path is not None:

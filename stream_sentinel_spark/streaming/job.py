@@ -55,9 +55,10 @@ def compile_rules_streaming(
     start (StreamSentinelJob.java:70-75).
 
     ``backend`` picks the stateful path; both are key-packed (one state
-    blob per ``xxhash64(key) mod 4096`` bucket — the fixed
+    blob per ``xxhash64(key) mod 256`` bucket — the fixed
     ``state.N_STATE_BUCKETS``, not derived from config because the
-    bucket is part of the checkpointed state key):
+    bucket is the checkpointed state key; a checkpoint of the earlier
+    4,096-bucket ``bigint`` key is refused on restart):
 
     - ``"arrival"`` (default): the reference's arrival-order
       evaluation (:func:`~stream_sentinel_spark.streaming.state.stateful_alerts`);

@@ -16,19 +16,28 @@ Two paths, both KEY-PACKED:
 - :func:`stateful_alerts_event_time` — event-time order up to the
   watermark (a reorder buffer flushed as the watermark passes).
 
-Both group by ``xxhash64(key) mod N_STATE_BUCKETS`` and keep ONE state
-blob per bucket: a JSON dict of key → detector state, so one framework
-round trip (Arrow group slice, state get/put, Python invocation) serves
-every key in the bucket. At a few thousand keys a bucket holds about one
-key; past that keys pack, which is where per-key grouping stopped
-scaling (8.15× at 295k keys, STRESS_r05_streaming.json).
+Both group by ``xxhash64(key) mod N_STATE_BUCKETS`` (256) and keep ONE
+state blob per bucket: a JSON dict of key → detector state, so one
+framework round trip (Arrow group slice, per-column pandas conversion,
+state get/put, Python invocation) serves every key in the bucket. That
+round trip, not the rule loop, is what a micro-batch of a few hundred
+live keys pays for: 256 buckets put ~300 keys per trigger into ~180
+groups where 4,096 buckets took ~300 (one per key), and past that keys
+pack, which is where per-key grouping stopped scaling (8.15× at 295k
+keys, STRESS_r05_streaming.json). 256 still leaves 8 buckets per
+partition at 32 shuffle partitions.
 
 ``N_STATE_BUCKETS`` is a fixed constant, deliberately NOT derived from
 the session (shuffle partitions, cores) or the data: the bucket id is
 the state store's grouping key, so a restart whose count differed would
 hash keys into other buckets than the ones holding their state and
-silently restart their detectors empty. Changing it is a state-format
-change that needs a fresh checkpoint.
+silently restart their detectors empty. Spark checks only the key's
+TYPE on restart, not its value range, so every change of the count
+also changes the key type: the 4,096-bucket layout keyed on pmod's
+``bigint``, the 256-bucket one keys on ``int``, and a checkpoint of the
+old layout is refused with ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``
+instead of resuming with keys hashed away from their state
+(tests/test_streaming_bucketed.py).
 
 A key's detector state is ``{"r<idx>": [..]}`` — rate rules hold the
 timestamp deque in epoch ms (bounded by the window duration,
@@ -53,7 +62,7 @@ import math
 from collections.abc import Iterator, Sequence
 from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
@@ -75,7 +84,7 @@ _EVMAP = "__ss_event"
 
 #: Hash buckets of both stateful paths — part of the checkpointed state
 #: key, so fixed (see the module docstring), never read from config.
-N_STATE_BUCKETS = 4096
+N_STATE_BUCKETS = 256
 
 #: Output schema of the stateful branch — identical to functions.alerts
 #: ALERT_FIELDS except alert_ts carried as epoch micros (converted back
@@ -114,8 +123,14 @@ def _eval_rate(rule_spec: dict, hist: list, ts_ms: int) -> str | None:
     threshold (:94)."""
     window_ms = rule_spec["window_seconds"] * 1000
     cutoff = ts_ms - window_ms
-    while hist and hist[0] < cutoff:
-        hist.pop(0)
+    # one scan for the first entry not below the cutoff, one slice
+    # delete: front-first like the reference, so an arrival-order
+    # history need not be sorted (no bisect)
+    i, n = 0, len(hist)
+    while i < n and hist[i] < cutoff:
+        i += 1
+    if i:
+        del hist[:i]
     hist.append(ts_ms)
     cnt = len(hist)
     if cnt > rule_spec["threshold"]:
@@ -308,7 +323,8 @@ def _run_rules_over_bucket(
     k_arr = key_np[order]
     ts_arr = ts_np[order]
     ev_arr = pdf[_EVMAP].to_numpy()[order]
-    val_arr = {idx: pdf[col].to_numpy()[order] for idx, col in value_cols.items()}
+    by_col = {col: pdf[col].to_numpy()[order] for col in set(value_cols.values())}
+    val_arr = {idx: by_col[col] for idx, col in value_cols.items()}
     bounds = np.flatnonzero(k_arr[1:] != k_arr[:-1]) + 1
     lo = 0
     for hi in [*bounds.tolist(), n]:
@@ -342,7 +358,10 @@ def _prepare_keyed(
     needs)."""
     idxs = list(rule_indexes) if rule_indexes is not None else list(range(len(rules)))
     specs: list[dict] = []
+    # rule index → value column, ONE column per distinct field: rules
+    # reading the same field share its conversion and buffer slot
     value_cols: dict[int, str] = {}
+    field_cols: dict[str, str] = {}
     cols = [
         key_column(events, key_field).alias(_KEY),
         F.unix_micros(F.col(time_col)).alias(_TSUS),
@@ -370,14 +389,21 @@ def _prepare_keyed(
         if rule.type not in ("rate", "statistical", "cusum"):
             raise ValueError(f"stateful_alerts got stateless rule type: {rule.type}")
         if rule.type in ("statistical", "cusum"):
-            vcol = f"__ss_v{idx}"
+            vcol = field_cols.get(rule.field)
+            if vcol is None:
+                vcol = field_cols[rule.field] = f"__ss_v{len(field_cols)}"
+                cols.append(numeric_field(events, rule.field).alias(vcol))
             value_cols[idx] = vcol
-            cols.append(numeric_field(events, rule.field).alias(vcol))
         specs.append(spec)
-    keyed = events.select(*cols).withColumn(
-        _BKT, F.pmod(F.xxhash64(F.col(_KEY)), F.lit(N_STATE_BUCKETS))
-    )
+    keyed = events.select(*cols).withColumn(_BKT, _bucket_column(F.col(_KEY)))
     return keyed, specs, value_cols
+
+
+def _bucket_column(key: Column) -> Column:
+    """The state key: ``xxhash64(key) mod N_STATE_BUCKETS`` as ``int``,
+    not pmod's ``bigint`` — the key type is the checkpoint guard of the
+    bucket count (module docstring)."""
+    return F.pmod(F.xxhash64(key), F.lit(N_STATE_BUCKETS)).cast("int")
 
 
 def _apply_packed(keyed: DataFrame, process, timeout: str) -> DataFrame:
@@ -479,12 +505,13 @@ def stateful_alerts(
     so the union with stateless branches keeps reference emission order
     (SURVEY §3.2).
 
-    Grouping is by ``xxhash64(key) mod N_STATE_BUCKETS`` with one state
-    blob per bucket; the same :func:`_eval_sorted` loop runs per key
-    slice of the bucket-sorted batch against that key's own detector
-    state, so results are those of a per-key processor (pinned against
-    the batch plan in tests/test_streaming_parity.py and
-    tests/test_streaming_bucketed.py). The state store holds at most
+    Grouping is by ``xxhash64(key) mod N_STATE_BUCKETS`` (256, an
+    ``int`` state key — the module docstring says why both are fixed)
+    with one state blob per bucket; the same :func:`_eval_sorted` loop
+    runs per key slice of the bucket-sorted batch against that key's
+    own detector state, so results are those of a per-key processor
+    (pinned against the batch plan in tests/test_streaming_parity.py
+    and tests/test_streaming_bucketed.py). The state store holds at most
     ``N_STATE_BUCKETS`` rows; the blobs grow with resident keys, so
     UNBOUNDED key spaces need the TTL below.
 
@@ -574,7 +601,9 @@ def _make_event_time_flush_processor(
     """
     import pandas as pd
 
-    buf_cols = [_KEY, _TSUS, _EVMAP, *order_cols, *value_cols.values()]
+    buf_cols = [
+        _KEY, _TSUS, _EVMAP, *order_cols, *dict.fromkeys(value_cols.values())
+    ]
     rate_windows = [
         ("r%d" % s["rule_index"], s["window_seconds"] * 1000)
         for s in rule_specs
@@ -609,11 +638,6 @@ def _make_event_time_flush_processor(
         blob = state.get[0] if state.exists else None
         st: dict = json.loads(blob) if blob else {"det": {}, "buf": _empty_buf()}
         buf = st["buf"]
-        if isinstance(buf, list):
-            # blob written by the pre-columnar (row-dict) version of
-            # this processor — a checkpoint upgraded in place must keep
-            # flushing; rows convert once and re-persist columnar
-            buf = {c: [r[c] for r in buf] for c in buf_cols}
         if not state.hasTimedOut:
             for pdf in pdfs:
                 for c in buf_cols:
@@ -654,14 +678,7 @@ def _make_event_time_flush_processor(
         n_pending = len(pending_buf[_TSUS])
         out = None
         if ready_buf is not None:
-            # str = current blob format (encoded on arrival above);
-            # dict = a row buffered by the pre-encoding version — a
-            # checkpoint upgraded in place must keep flushing, not
-            # poison every retry with TypeError
-            ready_buf[_EVMAP] = [
-                json.loads(s) if isinstance(s, str) else s
-                for s in ready_buf[_EVMAP]
-            ]
+            ready_buf[_EVMAP] = [json.loads(s) for s in ready_buf[_EVMAP]]
             out = _run_rules_over_bucket(
                 st["det"],
                 [pd.DataFrame(ready_buf, columns=buf_cols)],

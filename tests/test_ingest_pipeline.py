@@ -321,7 +321,35 @@ def _loop_epochs(spark, docs, table, root, batches, **kw):
 
 #: measured jobs of the second epoch of a loop (4 cores, 8 shuffle
 #: partitions); the probes of the match run in the first epoch only
-_STEADY_EPOCH_JOBS = {"minhash": 23, "minhash-exact": 19, "lsh": 19}
+_STEADY_EPOCH_JOBS = {"minhash": 21, "minhash-exact": 17, "lsh": 17}
+
+
+def test_pinned_count_is_one_job(spark):
+    """The loop counts its two lazy pins (epoch frame, accepted rows)
+    through their RDD: ONE job that materializes the pin, where
+    ``DataFrame.count()`` runs two under AQE — and later reads of the
+    pin recompute nothing."""
+    from pyspark.sql import functions as F
+
+    from stream_sentinel_spark.streaming.ingest import _pinned_count
+    from tests.conftest import count_jobs
+
+    computed = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tally(x):
+        computed.add(1)
+        return x
+
+    pinned = (
+        spark.range(1000).repartition(4).select(tally("id").alias("id"))
+        .localCheckpoint(eager=False)
+    )
+    n = []
+    assert count_jobs(spark, lambda: n.append(_pinned_count(pinned))) == 1
+    assert n == [1000] and computed.value == 1000
+    assert pinned.filter("id % 2 = 0").count() == 500
+    assert computed.value == 1000, "a read after the count recomputed the pin"
 
 
 @pytest.mark.parametrize("case", sorted(_STEADY_EPOCH_JOBS))

@@ -358,3 +358,49 @@ def test_aiws_on_rocksdb_matches_default_store(spark, events_src):
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     assert sorted(map(_alert_key, base)) == sorted(map(_alert_key, rocks))
+
+
+@pytest.mark.parametrize("backend", ["arrival", "event_time"])
+def test_old_bucket_key_checkpoint_is_refused(
+    spark, events_src, tmp_path, monkeypatch, backend
+):
+    """A checkpoint of the earlier 4,096-bucket layout (pmod's ``bigint``
+    state key) must not resume on the 256-bucket ``int`` key: Spark
+    checks the key type, not the bucket range, so only the type change
+    turns a silent restart with keys hashed away from their state into
+    a refusal."""
+    from pyspark.sql import functions as F
+
+    _, ev = events_src
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    part = ev.orderBy("event_id").limit(200).coalesce(1)
+    part.write.parquet(src)
+
+    def drain():
+        stream = read_file_stream(
+            spark, src, ev.schema, time_col="ts",
+            watermark="5 seconds" if backend == "event_time" else None,
+        )
+        alerts = compile_rules_streaming(
+            stream, RULES, key_field="user_id", time_col="ts",
+            order_cols=("event_id",), backend=backend,
+        )
+        (
+            # a memory sink cannot resume from a checkpoint
+            alerts.writeStream.format("parquet")
+            .option("path", str(tmp_path / "out"))
+            .outputMode("append").option("checkpointLocation", ckpt)
+            .trigger(availableNow=True).start().awaitTermination()
+        )
+
+    with monkeypatch.context() as m:
+        m.setattr(
+            state, "_bucket_column",
+            lambda key: F.pmod(F.xxhash64(key), F.lit(4096)),
+        )
+        drain()
+    # new input, so the restart plans a stateful batch against the old
+    # checkpoint's state schema
+    part.write.mode("append").parquet(src)
+    with pytest.raises(Exception, match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+        drain()

@@ -162,7 +162,7 @@ def test_event_time_bucketed_matches_batch_and_per_key(
 ):
     """The key-packed event-time mode must reproduce the batch alert set
     on the same shuffled cross-batch delivery with SEVERAL keys per
-    blob: at the default 4,096 buckets the fixture's four keys are
+    blob: at the default 256 buckets the fixture's four keys are
     spread about one per bucket (the test above), so the bucket count
     is patched to 2 here, forcing the key-primary sort + per-slice
     flush to separate keys sharing one buffer."""
@@ -323,59 +323,6 @@ def test_compile_rules_streaming_event_time_backends(spark, event_time_fixture):
     assert sorted(map(_key, streamed)) == sorted(map(_key, batch))
 
 
-def test_processor_tolerates_pre_encoding_state_blob():
-    """A checkpoint written before the encode-on-arrival change stores
-    each buffered row's original-event map as a DICT; the flush path
-    must process both that and the current string encoding instead of
-    poisoning every retry with a TypeError (in-place upgrade safety)."""
-    import json
-
-    from stream_sentinel_spark.streaming import state as S
-
-    spec = {
-        "rule_index": 0, "name": "high_rate", "type": "rate", "field": None,
-        "threshold": 0.0, "window_seconds": 60, "window_size": 0,
-        "deviation_factor": 0.0, "decimal_scale": None, "target": 0.0,
-    }
-    process = S._make_event_time_flush_processor([spec], {}, ())
-
-    old_row = {
-        S._KEY: "u1", S._TSUS: 1_000_000,
-        S._EVMAP: {"user_id": "u1", "value": "9.0"},
-    }
-    new_row = {
-        S._KEY: "u1", S._TSUS: 2_000_000, S._EVMAP: json.dumps({"user_id": "u1"}),
-    }
-    blob = json.dumps({"det": {}, "buf": [old_row, new_row]})
-
-    class FakeState:
-        hasTimedOut = False
-        exists = True
-        get = (blob,)
-
-        def __init__(self):
-            self.updated = None
-            self.removed = False
-
-        def getCurrentWatermarkMs(self):
-            return 10_000  # both buffered rows are ready
-
-        def update(self, t):
-            self.updated = t
-
-        def remove(self):
-            self.removed = True
-
-        def setTimeoutTimestamp(self, ts):
-            pass
-
-    st = FakeState()
-    out = list(process((0,), iter([]), st))
-    assert len(out) == 1 and len(out[0]) == 2, "both formats flushed"
-    assert all(isinstance(ev, dict) for ev in out[0]["original_event"])
-    assert {ev.get("user_id") for ev in out[0]["original_event"]} == {"u1"}
-
-
 class _EvtFakeState:
     def __init__(self, blob=None):
         self._blob = blob
@@ -528,13 +475,15 @@ def test_bucketed_event_time_ttl_evicts_only_idle_keys():
     assert blob["last"] == {"live": 12_000}
 
 
-def test_columnar_buffer_partial_flush_and_legacy_upgrade():
+def test_columnar_buffer_partial_flush():
     """The state blob's pending buffer is COLUMNAR (round 10: one list
     per column instead of one dict per row — the whole-buffer json
     round-trip per trigger was the backend's dominant cost). A partial
     flush must keep exactly the not-yet-ready rows, persist them
-    columnar, and flush them on the next watermark advance; a legacy
-    row-dict blob must upgrade in place to the columnar layout."""
+    columnar, and flush them on the next watermark advance. (Blobs of
+    the older row-dict layout need no upgrade path: their checkpoints
+    carry the 4,096-bucket ``bigint`` state key, which a restart
+    refuses — test_streaming_bucketed.py.)"""
     import json as _json
 
     from stream_sentinel_spark.streaming import state as S
@@ -557,31 +506,3 @@ def test_columnar_buffer_partial_flush_and_legacy_upgrade():
     st.wm = 10_000
     list(proc((0,), iter([]), st))
     assert _json.loads(st._blob)["det"]["k"]["r0"] == [1_000, 2_000]
-
-    # legacy list-of-row-dicts blob upgrades in place and keeps pending
-    legacy = _json.dumps(
-        {
-            "det": {},
-            "buf": [
-                {
-                    S._KEY: "k",
-                    S._TSUS: 1_000_000,
-                    S._EVMAP: {"n": "1"},
-                    "event_id": "e1",
-                },
-                {
-                    S._KEY: "k",
-                    S._TSUS: 9_000_000,
-                    S._EVMAP: _json.dumps({"n": "9"}),
-                    "event_id": "e9",
-                },
-            ],
-        }
-    )
-    st2 = _EvtFakeState(blob=legacy)
-    st2.wm = 1_500  # first legacy row ready, second pending
-    list(proc((0,), iter([]), st2))
-    blob2 = _json.loads(st2._blob)
-    assert blob2["det"]["k"]["r0"] == [1_000]
-    assert isinstance(blob2["buf"], dict)
-    assert blob2["buf"][S._TSUS] == [9_000_000]

@@ -273,3 +273,42 @@ def test_null_order_value_object_int_column():
     )
     assert out["rule_name"] == ["drift"], "exactly one alert => 7 ran first"
     assert out["original_event"] == [{"which": "null-order"}]
+
+
+def test_rules_on_one_field_share_one_value_column(spark, events_src):
+    """A statistical and a cusum rule on the same field ship ONE value
+    column (converted once per group, buffered once by the event-time
+    backend); each rule index still maps to it."""
+    from stream_sentinel_spark.streaming.state import _prepare_keyed
+
+    _, ev = events_src
+    rules = [
+        DetectionRule(
+            name="spike", type="rate", key_field="user_id",
+            window_seconds=60, threshold=3,
+        ),
+        DetectionRule(name="outlier", type="statistical", field="value"),
+        DetectionRule(name="drift", type="cusum", field="value", threshold=9.0),
+    ]
+    keyed, _, value_cols = _prepare_keyed(
+        ev, rules, "user_id", "ts", ("event_id",), None, None
+    )
+    assert value_cols == {1: "__ss_v0", 2: "__ss_v0"}
+    assert [c for c in keyed.columns if c.startswith("__ss_v")] == ["__ss_v0"]
+    assert dict(keyed.dtypes)["__ss_bkt"] == "int"
+
+
+def test_rate_eviction_stops_at_first_entry_in_window():
+    """The rate window evicts from the FRONT while the front is older
+    than the cutoff, as the reference's deque does: an older entry
+    behind a kept one (an arrival-order history need not be sorted)
+    stays."""
+    from stream_sentinel_spark.streaming.state import _eval_rate
+
+    spec = {"window_seconds": 10, "threshold": 100.0}
+    hist = [1_000, 2_000, 15_000, 3_000]
+    assert _eval_rate(spec, hist, 20_000) is None
+    assert hist == [15_000, 3_000, 20_000]
+    hist = [1_000, 2_000]
+    _eval_rate(spec, hist, 50_000)
+    assert hist == [50_000]
