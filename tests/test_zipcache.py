@@ -5,7 +5,9 @@ pyspark's worker calls at every task start), and a rewritten one is."""
 from __future__ import annotations
 
 import importlib
+import os
 import sys
+import time
 import zipfile
 import zipimport
 
@@ -17,12 +19,13 @@ from stream_sentinel_spark import zipcache
 _PKG = "ss_zipcache_probe"
 
 
-def _write_archive(path, extra: dict[str, str] | None = None) -> None:
+def _write_archive(path, extra: dict[str, str] | None = None,
+                   leaf: str = "mod") -> None:
     files = {
         f"{_PKG}/__init__.py": "",
         f"{_PKG}/sub/__init__.py": "",
         f"{_PKG}/sub/leaf/__init__.py": "",
-        f"{_PKG}/sub/leaf/mod.py": "VALUE = 1\n",
+        f"{_PKG}/sub/leaf/{leaf}.py": "VALUE = 1\n",
         **(extra or {}),
     }
     with zipfile.ZipFile(path, "w") as zf:
@@ -87,3 +90,20 @@ def test_rewritten_archive_is_reread(archive, monkeypatch):
     assert len(reads) <= 1, reads
     fresh = importlib.import_module(f"{_PKG}.sub.leaf.fresh")
     assert fresh.VALUE == 2
+
+
+def test_same_size_rewrite_with_mtime_kept_is_reread(archive, monkeypatch):
+    """A rewrite that keeps the size and restores the mtime (``cp -p``,
+    ``rsync -t``) still changes the ctime, so the directory is re-read."""
+    importlib.import_module(f"{_PKG}.sub.leaf.mod")
+    importlib.invalidate_caches()
+    before = os.stat(archive)
+    time.sleep(0.05)  # past one tick of the filesystem's ctime clock
+    _write_archive(archive, leaf="new")  # same name length: same size
+    os.utime(archive, ns=(before.st_atime_ns, before.st_mtime_ns))
+    after = os.stat(archive)
+    assert (after.st_size, after.st_mtime_ns) == (before.st_size, before.st_mtime_ns)
+    reads = _reads_of(archive, monkeypatch)
+    importlib.invalidate_caches()
+    assert len(reads) <= 1, reads
+    assert importlib.import_module(f"{_PKG}.sub.leaf.new").VALUE == 1
